@@ -93,10 +93,10 @@ def probe_edges_modes(
     carry those columns by name). Returns [(mode, stats_rows), ...]
     aligned with the input; pass each pair to
     ``bucketed_midranks``/``bucketed_cumsums`` via ``probe=``.
-    Identical decisions and identical literal bounds to the per-call
-    probe: min/max of a group are union-invariant, and the
-    approx-median only ever toggles the width/quantile MODE — bucket
-    geometry, never answers (the module contract)."""
+    The min/max literal bounds equal the per-call probe's (union-
+    invariant); the approx-median depends on partition layout, so near
+    the 5% skew edge the width/quantile MODE may differ from a per-call
+    probe — bucket geometry only, never answers (the module contract)."""
     if not margs:
         return []
     gc = list(margs[0][2])
@@ -307,14 +307,14 @@ def bucketed_cumsums(
     share one bucket structure: the KS two-sample ECDF gets both
     sides' cumulatives from a single pass.
 
-    CALLER CONTRACT: ``marg`` fans out to three subtrees here (edge
-    agg, bucket assignment, bucket totals), so the caller must pass a
-    frame whose recomputation is cheap — in practice, one derived
-    from a lazily localCheckpoint-ed corpus collapse (un-pinned, each
+    CALLER CONTRACT: only the bucketed distinct-value frame is pinned
+    here (marginal-sized); ``marg`` still feeds the auto probe and that
+    pin (twice on the quantile path), so the caller must pass a frame
+    whose recomputation is cheap — in practice, one derived from a
+    lazily localCheckpoint-ed corpus collapse (un-pinned, each
     reference re-expands the collapse lineage into its own corpus
     scan: measured 6 parquet scans in the equi-depth plan, NO
-    adaptive exchange reuse). The helper does not checkpoint
-    internally so a caller-pinned input is not materialized twice."""
+    adaptive exchange reuse)."""
     gc = list(group_cols)
     wc = list(weight_cols)
     # ``carry_cols``: extra marg columns to carry THROUGH the kernel
@@ -429,7 +429,7 @@ def bucketed_midranks(
     return cums.select(
         *group_cols,
         value_col,
-        *[c for c in carry_cols if c != value_col],
+        *[c for c in carry_cols if c not in (*group_cols, value_col)],
         (
             F.col(f"cum_{weight_col}")
             - (F.col(weight_col) - 1) / 2.0

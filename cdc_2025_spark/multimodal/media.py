@@ -10,6 +10,7 @@ regardless of source skew.
 from __future__ import annotations
 
 import hashlib
+import logging
 import struct as _struct
 from collections.abc import Iterator
 
@@ -25,6 +26,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+_log = logging.getLogger(__name__)
 
 MEDIA_SCHEMA = StructType(
     [
@@ -70,12 +73,14 @@ def _parallel_payloads(tasks: list) -> list[bytes]:
     (FLAC LPC+Rice costs ~1 s of pure Python PER CLIP) otherwise
     serialize a cold session's corpus build on one core. Every
     builder is a pure function of its kwargs, so the bytes are
-    identical to sequential evaluation in order; any pool failure
-    (restricted sandbox, no fork) falls back to the sequential loop.
+    identical to sequential evaluation in order. A pool that cannot
+    start or breaks (no fork, unpicklable task) falls back to the
+    sequential loop with a WARNING; builder errors propagate.
     Generation is a local-fixture concern only — at real scale media
     arrives in the lake and none of this code runs."""
     import concurrent.futures as _cf
     import os as _os
+    import pickle as _pickle
 
     if len(tasks) < 2:
         return [fn(**kw) for fn, kw in tasks]
@@ -84,7 +89,9 @@ def _parallel_payloads(tasks: list) -> list[bytes]:
         with _cf.ProcessPoolExecutor(max_workers=workers) as ex:
             futs = [ex.submit(fn, **kw) for fn, kw in tasks]
             return [f.result() for f in futs]
-    except Exception:
+    except (OSError, _cf.BrokenExecutor, _pickle.PicklingError) as e:
+        _log.warning("media payload pool failed (%r); encoding %d "
+                     "payloads sequentially", e, len(tasks))
         return [fn(**kw) for fn, kw in tasks]
 
 

@@ -53,8 +53,10 @@ _MEDIA_CACHE: _WeakKeyDictionary = _WeakKeyDictionary()
 # construction, so 15 per-key pins cost 15 sequential ~0.4 s driver
 # round trips cold — the rollup's measured cold floor. One union,
 # one repartition, one pin; per-key frames are filters over the
-# pinned blocks (identical rows, zero extra jobs). Keys outside this
-# registry (the neardup corpora) keep the per-key path.
+# pinned blocks (identical rows, zero extra jobs). All or nothing: a
+# request for ANY key here builds every corpus (FLAC fixtures
+# included), so a one-key caller pays for the whole union. Keys
+# outside this registry (the neardup corpora) keep the per-key path.
 _MEDIA_BUILDS = {
     "images": lambda spark: make_synthetic_media(spark, n=64, kind="image", n_slices=1),
     "audio": lambda spark: make_synthetic_media(spark, n=32, kind="audio", n_slices=1),

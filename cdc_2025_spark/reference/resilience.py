@@ -2,42 +2,25 @@
 
 Re-expresses src/features/resilience.py (the reference's per-group
 Python loops, :30-66) as ONE distributed aggregation — no Python on the
-hot path, single shuffle on the group key — plus the README-promised
-but unimplemented surface (README.md:4): parameterized shock simulation
-and per-group trend forecast.
+hot path, no window, one hash shuffle on the group key — plus the
+README-promised but unimplemented surface (README.md:4): parameterized
+shock simulation and per-group trend forecast.
 
 Duplicate-key parity: the reference takes "the first row in file order
 after a stable sort by Year" (resilience.py:31-35). Spark has no
 implicit row order, so parity callers thread an explicit ``_row_order``
-ingest column (io.with_row_order) and the per-(group, year) value is
-``min_by(value, _row_order)``. Without the column, the fallback is
-``min_by(value, value)`` — deterministic, and identical whenever keys
-are unique.
+ingest column (io.with_row_order) and each year's value is
+``min_by(value, _row_order)`` over that year's rows. Without the
+column, the fallback is the year's ``min(value)`` — deterministic, and
+identical whenever keys are unique.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from cdc_2025_spark.io import ROW_ORDER_COL
-
-
-def _per_group_year(
-    df: DataFrame,
-    group_col: str,
-    year_col: str,
-    value_col: str,
-) -> DataFrame:
-    """Collapse to one value per (group, year): first-in-file-order when
-    ``_row_order`` is present (reference duplicate-key semantics), else
-    min value (deterministic)."""
-    order = (
-        F.col(ROW_ORDER_COL) if ROW_ORDER_COL in df.columns else F.col(value_col)
-    )
-    return df.groupBy(group_col, year_col).agg(
-        F.min_by(value_col, order).alias("_v")
-    )
 
 
 def resilience_metrics(
@@ -57,25 +40,30 @@ def resilience_metrics(
     - ``Recovered_Years`` = min y-base_year over
       y in (base_year+1 .. shock_year+horizon) with v[y] >= v[base_year];
       NULL if never recovered (resilience.py:54-66).
-    - Groups with no base_year row are absent entirely (neither loop
+    - Groups with no base_year value are absent entirely (neither loop
       emits them; the full-outer merge at resilience.py:76 cannot
       resurrect them).
 
-    Plan shape: per-(group, year) hash aggregate, then a window + final
-    aggregate all partitioned by the group key — one shuffle total;
-    both aggregates are partial (map-side combined) and whole-stage
-    codegen'd. At 100 TB this is shuffle-minimal: cardinality drops to
-    |groups|x|years| after the first partial aggregate.
+    Plan shape: ONE ``groupBy(group_col)`` aggregate with one column
+    per year the metrics read (base, shock and the recovery range),
+    each a conditional ``min_by``/``min`` over that year's rows;
+    drawdown and recovery are projections over those columns. One
+    hash Exchange, no Window, partial (map-side combined) aggregation:
+    the shuffle carries at most one row per group per input partition.
+    Years are integers.
     """
-    per_year = _per_group_year(df, group_col, year_col, value_col)
-    w = Window.partitionBy(group_col)
-    with_base = per_year.withColumn(
-        "_v_base",
-        F.max(F.when(F.col(year_col) == base_year, F.col("_v"))).over(w),
-    )
-    last_year = shock_year + horizon
-    v_shock = F.max(F.when(F.col(year_col) == shock_year, F.col("_v")))
-    v_base = F.first("_v_base")
+    recovery_years = range(base_year + 1, shock_year + horizon + 1)
+    year, value = F.col(year_col), F.col(value_col)
+    if ROW_ORDER_COL in df.columns:
+        def at(y):
+            return F.min_by(value, F.when(year == y, F.col(ROW_ORDER_COL)))
+    else:
+        def at(y):
+            return F.min(F.when(year == y, value))
+
+    years = sorted({base_year, shock_year, *recovery_years})
+    per_group = df.groupBy(group_col).agg(*[at(y).alias(f"_v{y}") for y in years])
+    v_base, v_shock = F.col(f"_v{base_year}"), F.col(f"_v{shock_year}")
     # pandas float semantics for a zero base year: x/0 -> ±inf, 0/0 ->
     # NaN (witnessed in the golden mart: 'Motor vehicle and parts
     # dealers' = inf). Spark's Divide returns NULL on zero divisors in
@@ -86,23 +74,22 @@ def resilience_metrics(
         .when(v_shock < 0, F.lit(float("-inf")))
         .when(v_shock == 0, F.lit(float("nan")))
     )
-    out = (
-        with_base.groupBy(group_col)
-        .agg(
-            drawdown.alias("Drawdown_2020"),
-            F.min(
-                F.when(
-                    F.col(year_col).between(base_year + 1, last_year)
-                    & (F.col("_v") >= F.col("_v_base")),
-                    F.col(year_col) - base_year,
-                )
-            ).alias("Recovered_Years"),
-            F.first("_v_base").alias("_has_base"),
-        )
-        .filter(F.col("_has_base").isNotNull())
-        .drop("_has_base")
+    # years ascend, so the first one that reaches the base value is the
+    # least (the trailing NULL covers an empty range); y - base_year is
+    # typed as the per-row year_col - int
+    year_type = df.schema[year_col].dataType
+    recovered = F.coalesce(
+        *[
+            F.when(F.col(f"_v{y}") >= v_base, F.lit(y).cast(year_type) - base_year)
+            for y in recovery_years
+        ],
+        F.lit(None).cast(year_type) - base_year,
     )
-    return out
+    return per_group.filter(v_base.isNotNull()).select(
+        group_col,
+        drawdown.alias("Drawdown_2020"),
+        recovered.alias("Recovered_Years"),
+    )
 
 
 def resilience_metrics_grouped_map(

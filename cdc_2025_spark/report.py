@@ -18,15 +18,15 @@ whenever ties are absent (golden-tested on the reference data, which
 has none).
 
 Deliberately tiny: the serving layer reads engine OUTPUT; everything
-expensive already happened upstream. ``df.show()`` remains the
-interactive form.
+expensive already happened upstream. A page is ONE collect; the top-k
+views are cut from its rows on the driver, in Spark's order.
+``df.show()`` remains the interactive form.
 """
 
 from __future__ import annotations
 
 import html
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 _PAGE = """<!doctype html>
 <html><head><meta charset="utf-8">
@@ -56,15 +56,21 @@ def _cell(v) -> str:
     return html.escape(str(v))
 
 
-def _table(df: DataFrame) -> str:
-    cols = df.columns
-    rows = df.collect()
+def _table(cols: list[str], rows: list) -> str:
     head = "".join(f"<th>{html.escape(c)}</th>" for c in cols)
     body = "".join(
         "<tr>" + "".join(f"<td>{_cell(v)}</td>" for v in row) + "</tr>"
         for row in rows
     )
     return f"<table><thead><tr>{head}</tr></thead><tbody>{body}</tbody></table>"
+
+
+def _asc(v, nulls_last: bool = False) -> tuple:
+    """Sort key of Spark's ascending order: NaN (the only value unequal
+    to itself) above every number, NULL first or ``nulls_last``."""
+    if v is None:
+        return (2 * nulls_last,)
+    return (1, 0, v) if v == v else (1, 1)
 
 
 def resilience_report_html(
@@ -76,38 +82,34 @@ def resilience_report_html(
     missing-metrics warning when ``metrics`` is None). The full-set
     view renders in a deterministic order (group column) rather than
     the app's file order — the CSV the app reads is itself written in
-    that order by the pipeline."""
+    that order by the pipeline. Views, from one collect: the rows
+    ``orderBy(group_col)``, ``orderBy(Drawdown_2020.asc_nulls_last(),
+    group_col).limit(k)`` and, after ``na.drop`` of NULL/NaN
+    recoveries, ``orderBy(Recovered_Years, group_col).limit(k)``."""
     if metrics is None:
         return _PAGE.format(
             title=html.escape(title),
             body=f'<p class="warn">{html.escape(WARNING_TEXT)}</p>',
         )
-    group_col = metrics.columns[0]
+    cols, rows = metrics.columns, metrics.collect()
+    g, dd, rec = 0, cols.index("Drawdown_2020"), cols.index("Recovered_Years")
     # the app's views (top_k_worst_hit / top_k_fastest_recovery in
     # reference/resilience.py) leave tied rows at the limit boundary
     # unordered — fine interactively, nondeterministic for a written
     # artifact; the report's twins add the group tiebreak BEFORE the
     # limit so two renders are byte-identical
-    worst = metrics.orderBy(
-        F.col("Drawdown_2020").asc_nulls_last(), group_col
-    ).limit(k)
-    fastest = (
-        metrics.na.drop(subset=["Recovered_Years"])
-        .orderBy(
-            F.col("Recovered_Years").asc_nulls_last(), group_col
-        )
-        .limit(k)
+    worst = sorted(rows, key=lambda r: (_asc(r[dd], True), _asc(r[g])))
+    fastest = sorted(  # na.drop: neither NULL nor NaN
+        (r for r in rows if r[rec] is not None and r[rec] == r[rec]),
+        key=lambda r: (_asc(r[rec]), _asc(r[g])),
     )
     sections = [
-        (
-            "Resilience Metrics (full dataset)",
-            _table(metrics.orderBy(group_col)),
-        ),
-        (f"Top {k} Worst Hit in 2020", _table(worst)),
-        ("Fastest to Recover", _table(fastest)),
+        ("Resilience Metrics (full dataset)", sorted(rows, key=lambda r: _asc(r[g]))),
+        (f"Top {k} Worst Hit in 2020", worst[:k]),
+        ("Fastest to Recover", fastest[:k]),
     ]
     body = "".join(
-        f"<h2>{html.escape(h)}</h2>{t}" for h, t in sections
+        f"<h2>{html.escape(h)}</h2>{_table(cols, t)}" for h, t in sections
     )
     return _PAGE.format(title=html.escape(title), body=body)
 

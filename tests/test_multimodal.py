@@ -1271,3 +1271,46 @@ class TestBmpVariants:
             decode_bmp(bytes(nb))
         with pytest.raises(ValueError, match="no variant"):
             make_bmp_variant(8, 8, 1, bpp=16)
+
+
+def _tiny_payload(n: int) -> bytes:
+    return bytes([n])
+
+
+class _DeadPool:
+    """A process pool that cannot start (a restricted sandbox)."""
+
+    def __init__(self, *args, **kwargs):
+        raise OSError("no process pool here")
+
+
+def test_payload_pool_failure_falls_back_loudly(monkeypatch, caplog):
+    """A pool that cannot start degrades to sequential encoding with
+    the same bytes, and says so through the module logger."""
+    import concurrent.futures
+    import logging
+
+    from cdc_2025_spark.multimodal.media import _parallel_payloads
+
+    monkeypatch.setattr(concurrent.futures, "ProcessPoolExecutor", _DeadPool)
+    tasks = [(_tiny_payload, {"n": n}) for n in range(3)]
+    with caplog.at_level(logging.WARNING, "cdc_2025_spark.multimodal.media"):
+        assert _parallel_payloads(tasks) == [b"\x00", b"\x01", b"\x02"]
+    [rec] = caplog.records
+    assert rec.levelno == logging.WARNING
+    assert "OSError" in rec.getMessage() and "sequentially" in rec.getMessage()
+
+
+def test_payload_pool_does_not_swallow_other_errors(monkeypatch):
+    """Only pool failures fall back: any other error propagates."""
+    import concurrent.futures
+
+    from cdc_2025_spark.multimodal.media import _parallel_payloads
+
+    class _BadPool(_DeadPool):
+        def __init__(self, *args, **kwargs):
+            raise ValueError("not a pool failure")
+
+    monkeypatch.setattr(concurrent.futures, "ProcessPoolExecutor", _BadPool)
+    with pytest.raises(ValueError, match="not a pool failure"):
+        _parallel_payloads([(_tiny_payload, {"n": n}) for n in range(2)])

@@ -193,6 +193,71 @@ def test_shuffle_budget(spark, sf_dir, name, max_exchanges):
     assert n <= max_exchanges, f"{name}: {n} exchanges"
 
 
+@pytest.fixture
+def cached_fact(spark):
+    from cdc_2025_spark.io import with_row_order
+
+    rows = [
+        (f"ind{g}", y, float((7 * g + y) % 11))
+        for g in range(6)
+        for y in range(2016, 2025)
+    ]
+    fact = with_row_order(
+        spark.createDataFrame(rows, "Industry string, Year int, Real_Value double")
+    ).cache()
+    fact.count()
+    yield fact
+    fact.unpersist()
+
+
+def test_resilience_metrics_one_hash_exchange_no_window(spark, sf_dir, cached_fact):
+    """Every resilience result is one aggregate on the group key: one
+    hash Exchange and no Window, with or without ``_row_order``, for
+    the base metrics and the shock what-if alike."""
+    from cdc_2025_spark.io import ROW_ORDER_COL
+    from cdc_2025_spark.plans import exchange_count
+    from cdc_2025_spark.reference.resilience import (
+        resilience_metrics,
+        shock_simulation,
+    )
+
+    frames = {
+        "metrics": resilience_metrics(cached_fact),
+        "no_row_order": resilience_metrics(cached_fact.drop(ROW_ORDER_COL)),
+        "shock": shock_simulation(cached_fact, 0.2, 2020),
+    }
+    for name, df in frames.items():
+        p = plan_string(df, mode="simple")
+        assert exchange_count(df) == 1, name
+        assert p.count("Exchange hashpartitioning(Industry") == 1, name
+        assert "Window" not in p, name
+    p = plan_of(spark, sf_dir, "resilience_nation_revenue")
+    assert "Window" not in p
+
+
+def _sql_execution_ids(spark) -> set[int]:
+    """Ids of the newest SQL executions in the session's status store
+    (kept with the UI off), after the listener bus has drained."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    store = spark._jsparkSession.sharedState().statusStore()
+    n = store.executionsCount()
+    recent = store.executionsList(max(n - 50, 0), 50)
+    return {recent.apply(i).executionId() for i in range(recent.size())}
+
+
+def test_report_page_is_one_sql_execution(spark, cached_fact):
+    """A serving page runs the metrics once: one SQL execution for
+    all three views."""
+    from cdc_2025_spark.reference.resilience import resilience_metrics
+    from cdc_2025_spark.report import resilience_report_html
+
+    before = max(_sql_execution_ids(spark), default=-1)
+    page = resilience_report_html(resilience_metrics(cached_fact), k=3)
+    new = {i for i in _sql_execution_ids(spark) if i > before}
+    assert len(new) == 1, sorted(new)
+    assert page.count("<table>") == 3
+
+
 def test_corpus_prep_broadcasts_eval_no_cartesian(spark, sf_dir):
     """The composed prep pipeline must keep the decontamination
     stage's asymmetric broadcast (eval side tiny) and introduce no

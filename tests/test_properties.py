@@ -6,6 +6,7 @@ each example runs Spark jobs.
 
 from __future__ import annotations
 
+import math
 from datetime import datetime, timedelta
 
 from hypothesis import HealthCheck, given, settings
@@ -103,65 +104,101 @@ def test_melt_pivot_round_trip(spark, vals):
     assert got == want
 
 
+def _same_metric(got, want) -> bool:
+    """Equal up to float noise, with NULL, NaN and ±inf exact."""
+    if got is None or want is None:
+        return got is None and want is None
+    if math.isnan(want) or math.isinf(want):
+        return math.isnan(got) if math.isnan(want) else got == want
+    return abs(got - want) <= 1e-9 * max(1.0, abs(want))
+
+
 @SETTINGS
 @given(
     rows=st.lists(
         st.tuples(
             st.sampled_from(["ind_a", "ind_b", "ind_c"]),
-            st.integers(min_value=2018, max_value=2023),
-            st.floats(min_value=0.1, max_value=100, allow_nan=False),
+            st.integers(min_value=2016, max_value=2023),
+            st.one_of(
+                st.sampled_from([0.0, -1.0, 2.0]),
+                st.floats(min_value=-100, max_value=100, allow_nan=False),
+            ),
         ),
         min_size=1,
         max_size=25,
-    )
+    ),
+    setting=st.sampled_from(
+        [
+            (2019, 2020, 3),
+            (2019, 2018, 2),  # shock before the base year
+            (2019, 2019, 1),  # shock at the base year
+            (2020, 2017, 2),  # empty recovery range
+            (2018, 2022, 0),
+        ]
+    ),
+    ordered=st.booleans(),
 )
-def test_resilience_metrics_match_sequential_model(spark, rows):
+def test_resilience_metrics_match_sequential_model(spark, rows, setting, ordered):
     """Drawdown/recovery vs a straight sequential-python model of the
-    reference algorithm (resilience.py:29-66): first row in file order
-    per (group, year) wins; groups missing the base or shock year are
-    skipped per metric; recovery is the first year in the horizon at
-    or above base."""
+    reference algorithm (resilience.py:29-66) and vs the grouped-map
+    twin: with ``_row_order``, the first row in file order per
+    (group, year) wins, without it the smallest value; groups missing
+    the base year are absent, a missing shock year gives a NULL
+    drawdown, a zero base gives ±inf / NaN (pandas division); recovery
+    is the first year in the horizon at or above base."""
     from cdc_2025_spark.io import with_row_order
-    from cdc_2025_spark.reference.resilience import resilience_metrics
-
-    base, shock, horizon = 2019, 2020, 3
-    df = with_row_order(
-        spark.createDataFrame(rows, "Industry string, Year int, Real_Value double")
+    from cdc_2025_spark.reference.resilience import (
+        resilience_metrics,
+        resilience_metrics_grouped_map,
     )
+
+    base, shock, horizon = setting
+    df = spark.createDataFrame(rows, "Industry string, Year int, Real_Value double")
+    if ordered:
+        df = with_row_order(df)
+    kw = dict(base_year=base, shock_year=shock, horizon=horizon)
     got = {
         r["Industry"]: (r["Drawdown_2020"], r["Recovered_Years"])
-        for r in resilience_metrics(
-            df, base_year=base, shock_year=shock, horizon=horizon
-        ).collect()
+        for r in resilience_metrics(df, **kw).collect()
+    }
+    twin = {
+        r["Industry"]: (r["Drawdown_2020"], r["Recovered_Years"])
+        for r in resilience_metrics_grouped_map(df, **kw).collect()
     }
 
-    # sequential model: first occurrence per (group, year) in row order
-    firsts: dict = {}
-    for i, (g, y, v) in enumerate(rows):
-        firsts.setdefault((g, y), v)
-    groups = {g for g, _, _ in rows}
+    # sequential model: first occurrence (or smallest value) per
+    # (group, year)
+    picked: dict = {}
+    for g, y, v in rows:
+        if (g, y) not in picked:
+            picked[g, y] = v
+        elif not ordered:
+            picked[g, y] = min(picked[g, y], v)
     want = {}
-    for g in sorted(groups):
-        vb = firsts.get((g, base))
+    for g in sorted({g for g, _, _ in rows}):
+        vb = picked.get((g, base))
         if vb is None:
             continue  # no base year -> absent entirely (resilience.py:36,55)
-        vs = firsts.get((g, shock))
-        dd = (vs - vb) / vb if vs is not None else None
+        vs = picked.get((g, shock))
+        if vs is None:
+            dd = None
+        elif vb != 0:
+            dd = (vs - vb) / vb
+        else:
+            dd = math.inf if vs > 0 else -math.inf if vs < 0 else math.nan
         rec = None
         for y in range(base + 1, shock + horizon + 1):
-            vy = firsts.get((g, y))
+            vy = picked.get((g, y))
             if vy is not None and vy >= vb:
                 rec = y - base
                 break
         want[g] = (dd, rec)
-    assert set(got) == set(want)
+    assert set(got) == set(want) == set(twin)
     for g, (dd, rec) in want.items():
-        gdd, grec = got[g]
-        if dd is None:
-            assert gdd is None, g
-        else:
-            assert gdd is not None and abs(gdd - dd) < 1e-9, g
-        assert grec == rec, g
+        for impl, (gdd, grec) in (("agg", got[g]), ("grouped_map", twin[g])):
+            assert _same_metric(gdd, dd), (impl, g, gdd, dd)
+            assert _same_metric(grec, rec), (impl, g, grec, rec)
+        assert got[g][1] is None or isinstance(got[g][1], int), g
 
 
 @SETTINGS

@@ -141,6 +141,27 @@ def test_grouped_auto_switch_per_worst_group(spark):
         assert have == want, g
 
 
+def test_midranks_carry_col_that_is_a_group_col(spark):
+    """A carry column that is also a group column is output once, and
+    a genuine carry column still rides along unchanged."""
+    rows = [("u", float(v), 1, f"t{v}") for v in range(1, 21)]
+    rows += [("z", float(v), 2, f"t{v}") for v in range(1, 21)]
+    marg = spark.createDataFrame(rows, "g string, v double, c long, tag string")
+    out = bucketed_midranks(
+        marg, "v", "c", "r", group_cols=("g",), n_buckets=N_BUCKETS,
+        carry_cols=("g", "tag"),
+    )
+    assert out.columns == ["g", "v", "tag", "r"]
+    got = out.collect()
+    for g in ("u", "z"):
+        want = _python_midranks(
+            [(v, c) for gg, v, c, _ in rows if gg == g]
+        )
+        have = {r["v"]: r["r"] for r in got if r["g"] == g}
+        assert have == want, g
+    assert all(r["tag"] == f"t{int(r['v'])}" for r in got)
+
+
 def test_degenerate_single_value_and_ties(spark):
     """All-equal values: one bucket, midrank = (n + 1)/2 regardless
     of geometry; ties share the midrank exactly."""

@@ -6,12 +6,15 @@ replay of the app's own view code on the reference data."""
 
 from __future__ import annotations
 
+import html
 import os
 import re
 
 import pandas as pd
 import pytest
+from pyspark.sql import functions as F
 
+from cdc_2025_spark import report
 from cdc_2025_spark.io import read_csv, with_row_order
 from cdc_2025_spark.reference.resilience import resilience_metrics
 from cdc_2025_spark.report import (
@@ -100,3 +103,82 @@ def test_report_warning_branch_and_writer(spark, tmp_path, metrics):
     text = open(p, encoding="utf-8").read()
     assert text == resilience_report_html(metrics)
     assert text.startswith("<!doctype html>")
+
+
+def _three_query_page(metrics, k: int) -> str:
+    """The page as three Spark queries, one per view: the render the
+    single collect replaced, kept as its model."""
+    g = metrics.columns[0]
+    worst = metrics.orderBy(F.col("Drawdown_2020").asc_nulls_last(), g).limit(k)
+    fastest = (
+        metrics.na.drop(subset=["Recovered_Years"])
+        .orderBy(F.col("Recovered_Years").asc_nulls_last(), g)
+        .limit(k)
+    )
+    sections = [
+        ("Resilience Metrics (full dataset)", metrics.orderBy(g)),
+        (f"Top {k} Worst Hit in 2020", worst),
+        ("Fastest to Recover", fastest),
+    ]
+    body = "".join(
+        f"<h2>{html.escape(h)}</h2>{report._table(df.columns, df.collect())}"
+        for h, df in sections
+    )
+    return report._PAGE.format(
+        title=html.escape("Industry Resilience Explorer"), body=body
+    )
+
+
+NAN, INF = float("nan"), float("inf")
+# every ordering edge of the three views: NULL, NaN and ±inf
+# drawdowns, -0.0 tied with 0.0, a NULL group key inside a tie,
+# drawdown and recovery ties across the k boundaries, and NaN / NULL
+# recoveries that the fastest view drops
+EDGE_METRICS = [
+    ("m", -0.5, 2.0),
+    (None, -0.5, 1.0),
+    ("b", -0.5, NAN),
+    ("k", -0.5, 1.0),
+    ("a", None, 1.0),
+    ("z", NAN, None),
+    ("c", INF, 3.0),
+    ("d", -INF, 1.0),
+    ("e", 0.0, 2.0),
+    ("f", -0.0, None),
+    ("g", 0.25, 1.0),
+    ("h", NAN, 2.0),
+    ("i", None, NAN),
+    ("Ä", -0.5, 2.0),
+    ("j", 0.25, 3.0),
+]
+
+
+@pytest.mark.parametrize("k", [1, 3, 4, 6, 10, 20])
+def test_one_collect_page_matches_three_query_render(spark, k):
+    metrics = spark.createDataFrame(
+        EDGE_METRICS,
+        "Industry string, Drawdown_2020 double, Recovered_Years double",
+    ).repartition(3)
+    assert resilience_report_html(metrics, k=k) == _three_query_page(metrics, k)
+
+
+def test_one_collect_page_matches_on_engine_metrics(spark):
+    """The same identity on ``resilience_metrics`` output (integer
+    ``Recovered_Years``) over a fact with zero, negative and
+    missing base values and duplicate keys."""
+    rows = [
+        ("w", 2019, 0.0), ("w", 2020, 5.0), ("x", 2019, 0.0),
+        ("x", 2020, 0.0), ("y", 2019, -2.0), ("y", 2020, -1.0),
+        ("y", 2021, -3.0), ("v", 2019, 4.0), ("v", 2019, 1.0),
+        ("v", 2020, 2.0), ("v", 2022, 4.0), ("u", 2020, 1.0),
+        ("t", 2019, 4.0), ("t", 2020, 2.0), ("t", 2022, 4.0),
+        ("s", 2019, 4.0), ("s", 2021, 5.0), (None, 2019, 1.0),
+    ]
+    fact = with_row_order(
+        spark.createDataFrame(rows, "Industry string, Year int, Real_Value double")
+    )
+    metrics = resilience_metrics(fact).cache()
+    for k in (2, 3, 10):
+        assert resilience_report_html(metrics, k=k) == _three_query_page(metrics, k)
+    metrics.unpersist()
+
