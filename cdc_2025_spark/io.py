@@ -163,20 +163,20 @@ def write_single_excel(
     boundary (CDCPROJECT notebook nb:1977,1996).
 
     Driver-side by definition (Excel is an export format for small
-    result tables, not a lake format): collects to pandas behind an
-    explicit row-count guard and writes one sheet. Delegates to
+    result tables, not a lake format): collects at most
+    ``max_rows + 1`` rows to pandas in one evaluation of the frame,
+    refuses if the extra row came back, and writes one sheet. Delegates to
     ``pandas.to_excel`` when an engine (openpyxl/xlsxwriter) is
     installed; otherwise uses the built-in minimal OOXML writer
     (cdc_2025_spark.excel), which preserves leading whitespace — the
     Industry column is indentation-encoded.
     """
-    n = df.count()
-    if n > max_rows:
+    pdf = df.limit(max_rows + 1).toPandas()
+    if len(pdf) > max_rows:
         raise ValueError(
-            f"refusing to export {n} rows to a single Excel sheet "
-            f"(max_rows={max_rows}); write parquet for large results"
+            f"refusing to export more than {max_rows} rows to a single "
+            "Excel sheet; write parquet for large results"
         )
-    pdf = df.toPandas()
     os.makedirs(os.path.dirname(os.path.abspath(path)), exist_ok=True)
     try:
         pdf.to_excel(path, sheet_name=sheet_name, index=False)

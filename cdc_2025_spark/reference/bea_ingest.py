@@ -120,13 +120,30 @@ def pivot_wide(fact: DataFrame, values: str = "Real_Value") -> DataFrame:
 
     pandas ``pivot_table`` silently averages duplicate
     (Industry, Year) keys (default aggfunc); ``avg`` — not ``first`` —
-    is required for golden parity. One hash-aggregate shuffle on
-    Industry; year cardinality is tiny so the wide row fits anywhere.
+    is required for golden parity. One hash shuffle on Industry: each
+    year column is a conditional ``avg(CASE WHEN Year <=> y THEN
+    value END)`` in a single aggregate, so there is no (Industry, Year)
+    exchange and no PivotFirst. The ~12 distinct years are collected
+    unsorted and ordered on the driver, NULL first as Spark's ``asc``
+    orders them, which keeps the sort and its range-sampling job out
+    of the probe. Columns are named like Spark's pivot names them
+    (``str`` of the year, ``null`` for a NULL year).
     """
-    years = [r[0] for r in fact.select("Year").distinct().orderBy("Year").collect()]
-    return (
-        fact.groupBy("Industry")
-        .pivot("Year", years)
-        .agg(F.avg(values))
-        .orderBy("Industry")
+    years = sorted(
+        (r[0] for r in fact.select("Year").distinct().collect()),
+        key=lambda y: (y is not None, y),
     )
+    year = F.col("Year")
+    cols = [
+        F.avg(F.when(year.eqNullSafe(y), F.col(values))).alias(
+            "null" if y is None else str(y)
+        )
+        for y in years
+    ]
+    # only an empty fact has no years: its pivot is the Industry column
+    wide = (
+        fact.groupBy("Industry").agg(*cols)
+        if cols
+        else fact.select("Industry").distinct()
+    )
+    return wide.orderBy("Industry")

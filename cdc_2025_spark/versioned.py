@@ -23,10 +23,12 @@ reader, reclaimed by ``vacuum``.
 Scale posture: manifests are a few KB of JSON regardless of table
 size (they list directories, not rows); data dirs are written by
 ordinary distributed writers; reads are plain multi-path parquet
-scans with all the usual pushdown/pruning. Round 13 added the
-production next rung the real formats have: per-data-dir MIN/MAX
-column stats harvested from the parquet FOOTERS at commit time
-(no extra Spark job) and recorded in the manifest, so
+scans with all the usual pushdown/pruning. Every commit reads its
+row counts from the parquet FOOTERS of the files it just wrote (and
+of the dirs it rewrites) — no Spark job, no data pages — so a
+manifest's ``n_rows`` is the rows actually committed, even for a
+non-deterministic frame. The same footer pass harvests per-data-dir
+MIN/MAX column stats into the manifest, so
 ``read_versioned(..., predicates=[...])`` skips whole directories
 whose stats preclude a match BEFORE any scan is planned — on an
 append-accumulated table, a point or range read touches only the
@@ -118,15 +120,17 @@ def history(path: str) -> list[dict]:
     return [_read_manifest(path, v) for v in _list_versions(path)]
 
 
-def _dir_stats(data_dir: str) -> dict:
-    """Per-column [min, max] over every parquet footer in a data
-    dir — read from file METADATA (pyarrow), no Spark job, no data
-    pages touched. Numeric and utf8 columns only (binary stats are
+def _dir_footers(data_dir: str) -> tuple[int, dict]:
+    """One pass over every parquet footer in a data dir, read from
+    file METADATA (pyarrow) — no Spark job, no data pages touched.
+    Returns the dir's row count and its per-column [min, max] stats.
+    Stats cover numeric and utf8 columns only (binary stats are
     truncation-prone and date/ts objects are not JSON); a column
     missing from any footer is dropped (no stats = never pruned =
     always safe)."""
     import pyarrow.parquet as pq
 
+    n_rows = 0
     mins: dict[str, object] = {}
     maxs: dict[str, object] = {}
     seen_files = 0
@@ -137,6 +141,7 @@ def _dir_stats(data_dir: str) -> dict:
                 continue
             seen_files += 1
             md = pq.ParquetFile(os.path.join(root, f)).metadata
+            n_rows += md.num_rows
             file_cols: set[str] = set()
             for rg in range(md.num_row_groups):
                 g = md.row_group(rg)
@@ -172,11 +177,16 @@ def _dir_stats(data_dir: str) -> dict:
             for name in list(mins):
                 if name not in file_cols:
                     dropped.add(name)
-    return {
+    return n_rows, {
         name: [mins[name], maxs[name]]
         for name in mins
         if name not in dropped and seen_files > 0
     }
+
+
+def _dirs_rows(path: str, dirs: list[str]) -> int:
+    """Committed rows in a table's data dirs, summed from footers."""
+    return sum(_dir_footers(os.path.join(path, d))[0] for d in dirs)
 
 
 _OPS = ("==", "=", ">=", "<=", ">", "<")
@@ -253,7 +263,9 @@ def write_versioned(
     """Commit ``df`` as a new snapshot. ``mode='append'`` adds the
     rows to the latest snapshot; ``'overwrite'`` replaces it.
     Returns the committed version. Retries the version CAS up to
-    ``max_retries`` times on a concurrent-writer conflict.
+    ``max_retries`` times on a concurrent-writer conflict. The frame
+    is evaluated once, by the write: the manifest's row count comes
+    from the written files' footers, no Spark job.
     ``merge_schema=True`` allows ADDITIVE schema evolution on
     append (new columns; old rows read them as NULL — the Delta
     mergeSchema rule); type changes always refuse.
@@ -270,7 +282,6 @@ def write_versioned(
     os.makedirs(os.path.join(path, _MANIFEST_DIR), exist_ok=True)
     os.makedirs(os.path.join(path, _DATA_DIR), exist_ok=True)
     schema_ddl = df.schema.simpleString()
-    n_rows = df.count()
     for attempt in range(max_retries):
         vs = _list_versions(path)
         version = (vs[-1] + 1) if vs else 1
@@ -309,7 +320,8 @@ def write_versioned(
         rel_dir = f"{_DATA_DIR}/{version:08d}-{nonce}"
         data_dir = os.path.join(path, rel_dir)
         df.write.mode("overwrite").parquet(data_dir)
-        stats = {rel_dir: _dir_stats(data_dir)}
+        n_rows, dir_stats = _dir_footers(data_dir)
+        stats = {rel_dir: dir_stats}
         if mode == "append" and vs:
             dirs = prev["data_dirs"] + [rel_dir]
             total = prev["n_rows"] + n_rows
@@ -340,19 +352,9 @@ def write_versioned(
             "dir_stats": stats,
             "committed_at": time.time(),
         }
-        tmp = _manifest_path(path, version) + f".tmp-{nonce}"
-        with open(tmp, "w") as f:
-            json.dump(manifest, f)
-        try:
-            # os.link fails with EEXIST if another writer took this
-            # version — the atomic compare-and-swap of the protocol
-            os.link(tmp, _manifest_path(path, version))
-            os.unlink(tmp)
+        if _commit_manifest(path, manifest, version, nonce):
             return version
-        except FileExistsError:
-            os.unlink(tmp)
-            shutil.rmtree(data_dir, ignore_errors=True)
-            continue  # retry against the new latest
+        shutil.rmtree(data_dir, ignore_errors=True)  # retry on the new latest
     raise RuntimeError(
         f"lost the version CAS {max_retries} times — writer storm; "
         "raise max_retries or serialize the writers"
@@ -412,14 +414,7 @@ def read_versioned(
         *[os.path.join(path, d) for d in dirs]
     )
     if predicates:
-        from pyspark.sql import functions as F  # noqa: PLC0415
-
-        ops = {
-            "==": "__eq__", "=": "__eq__", ">=": "__ge__",
-            "<=": "__le__", ">": "__gt__", "<": "__lt__",
-        }
-        for col, op, val in predicates:
-            df = df.filter(getattr(F.col(col), ops[op])(F.lit(val)))
+        df = df.filter(_predicate_column(predicates))
     return df
 
 
@@ -456,16 +451,9 @@ def rollback(path: str, version: int, max_retries: int = 5) -> int:
             "dir_stats": target.get("dir_stats", {}),
             "committed_at": time.time(),
         }
-        tmp = _manifest_path(path, new_v) + f".tmp-{os.getpid():x}a{attempt}"
-        with open(tmp, "w") as f:
-            json.dump(manifest, f)
-        try:
-            os.link(tmp, _manifest_path(path, new_v))
-            os.unlink(tmp)
+        # a lost CAS means a concurrent commit took new_v: retry on top
+        if _commit_manifest(path, manifest, new_v, f"{os.getpid():x}a{attempt}"):
             return new_v
-        except FileExistsError:
-            os.unlink(tmp)
-            continue  # a concurrent commit took new_v; retry on top of it
     raise RuntimeError(
         f"rollback lost the version CAS {max_retries} times — "
         "writer storm; raise max_retries or serialize the writers"
@@ -556,6 +544,7 @@ def optimize_versioned(
         df.repartition(int(n_files)).write.mode("overwrite").parquet(
             data_dir
         )
+    n_rows, dir_stats = _dir_footers(data_dir)
     manifest = {
         "version": version,
         "parent": vs[-1],
@@ -565,24 +554,17 @@ def optimize_versioned(
             else "optimize"
         ),
         "data_dirs": [rel_dir],
-        "n_rows": prev["n_rows"],
+        "n_rows": n_rows,
         "schema": prev["schema"],
         # compaction rewrites every row under the manifest schema, so
         # the new snapshot's single dir is physically uniform again
         "schema_evolved": False,
         "constraints": prev.get("constraints", {}),
         "txns": prev.get("txns", {}),
-        "dir_stats": {rel_dir: _dir_stats(data_dir)},
+        "dir_stats": {rel_dir: dir_stats},
         "committed_at": time.time(),
     }
-    tmp = _manifest_path(path, version) + f".tmp-{nonce}"
-    with open(tmp, "w") as f:
-        json.dump(manifest, f)
-    try:
-        os.link(tmp, _manifest_path(path, version))
-        os.unlink(tmp)
-    except FileExistsError:
-        os.unlink(tmp)
+    if not _commit_manifest(path, manifest, version, nonce):
         shutil.rmtree(data_dir, ignore_errors=True)
         raise RuntimeError(
             "optimize lost the version CAS to a concurrent writer — "
@@ -650,6 +632,8 @@ def _commit_manifest(
     with open(tmp, "w") as f:
         json.dump(manifest, f)
     try:
+        # os.link fails with EEXIST if another writer took this
+        # version — the atomic compare-and-swap of the protocol
         os.link(tmp, _manifest_path(path, version))
         os.unlink(tmp)
         return True
@@ -726,7 +710,6 @@ def _cow_rewrite(
         # rows where the predicate is NULL are NOT matched (the SQL
         # DELETE/UPDATE rule) — coalesce to False before branching
         matched = F.coalesce(cond, F.lit(False))
-        n_before = df.count()
         out, n_changed = transform(df, matched)
         if out is not None and not operation.startswith("delete:"):
             # an UPDATE can push rows outside a CHECK; a DELETE
@@ -737,8 +720,8 @@ def _cow_rewrite(
         if n_changed == 0:
             # stats were conservative: the touched dirs hold no
             # actual match — a no-op, NOT a rewrite (returning the
-            # survivors-only dir here would have to rewrite
-            # n_before unchanged rows for nothing)
+            # survivors-only dir here would have to rewrite every
+            # touched row unchanged for nothing)
             return {
                 "version": vs[-1],
                 "rows_changed": 0,
@@ -751,12 +734,10 @@ def _cow_rewrite(
         )
         rel_dir = f"{_DATA_DIR}/{version:08d}-{nonce}"
         data_dir = os.path.join(path, rel_dir)
-        n_out = 0
+        n_out, out_stats = 0, {}
         if out is not None:
             out.write.mode("overwrite").parquet(data_dir)
-            n_out = (
-                spark.read.schema(schema).parquet(data_dir).count()
-            )
+            n_out, out_stats = _dir_footers(data_dir)
             if n_out == 0:
                 # a DELETE emptied every touched dir: the manifest
                 # will not reference this dir, so remove it now
@@ -768,13 +749,13 @@ def _cow_rewrite(
             d: s for d, s in stats.items() if d in kept
         }
         if n_out:
-            new_stats[rel_dir] = _dir_stats(data_dir)
+            new_stats[rel_dir] = out_stats
         manifest = {
             "version": version,
             "parent": vs[-1],
             "operation": operation,
             "data_dirs": new_dirs,
-            "n_rows": m["n_rows"] - n_before + n_out,
+            "n_rows": m["n_rows"] - _dirs_rows(path, touched) + n_out,
             "schema": m["schema"],
             "schema_evolved": m.get("schema_evolved", False),
             "constraints": m.get("constraints", {}),
@@ -1088,13 +1069,11 @@ def merge_versioned(
         ]
         kept = [d for d in m["data_dirs"] if d not in touched]
         n_matched = 0
-        n_touched_rows = 0
         n_src_matched = 0
         if touched:
             tgt = spark.read.schema(schema).parquet(
                 *[os.path.join(path, d) for d in touched]
             )
-            n_touched_rows = tgt.count()
             src_keys = src.select(*key_cols).distinct()
             n_matched = tgt.join(
                 src_keys, key_cols, "left_semi"
@@ -1116,15 +1095,15 @@ def merge_versioned(
         rel_dir = f"{_DATA_DIR}/{version:08d}-{nonce}"
         data_dir = os.path.join(path, rel_dir)
         out.write.mode("overwrite").parquet(data_dir)
-        n_out = spark.read.schema(schema).parquet(data_dir).count()
+        n_out, out_stats = _dir_footers(data_dir)
         new_stats = {d: s for d, s in stats.items() if d in kept}
-        new_stats[rel_dir] = _dir_stats(data_dir)
+        new_stats[rel_dir] = out_stats
         manifest = {
             "version": version,
             "parent": vs[-1],
             "operation": f"merge:{key_cols}",
             "data_dirs": kept + [rel_dir],
-            "n_rows": m["n_rows"] - n_touched_rows + n_out,
+            "n_rows": m["n_rows"] - _dirs_rows(path, touched) + n_out,
             "schema": m["schema"],
             "schema_evolved": m.get("schema_evolved", False),
             "constraints": m.get("constraints", {}),

@@ -17,6 +17,8 @@ import pytest
 from cdc_2025_spark.excel import read_xlsx, write_xlsx
 from cdc_2025_spark.io import write_single_excel
 
+from tests.conftest import reference_csv
+
 
 def test_roundtrip_types_and_whitespace(spark, tmp_path):
     df = spark.createDataFrame(
@@ -76,6 +78,10 @@ def test_row_guard(spark, tmp_path):
     df = spark.range(100).withColumnRenamed("id", "v")
     with pytest.raises(ValueError, match="refusing"):
         write_single_excel(df, str(tmp_path / "big.xlsx"), max_rows=10)
+    # exactly max_rows rows is not refused
+    path = str(tmp_path / "ten.xlsx")
+    write_single_excel(df.limit(10), path, max_rows=10)
+    assert [int(x) for x in read_xlsx(path)["v"]] == list(range(10))
 
 
 def test_ingest_excel_sheet_with_skiprows(spark, tmp_path):
@@ -116,9 +122,7 @@ def test_export_resilience_metrics(spark, tmp_path):
 
     fact = with_row_order(
         read_csv(
-            spark,
-            "/root/reference/data/processed/clean_va_price.csv",
-            schema=CLEAN_VA_PRICE,
+            spark, reference_csv("clean_va_price.csv"), schema=CLEAN_VA_PRICE
         )
     )
     top = top_k_worst_hit(resilience_metrics(fact)).limit(10)

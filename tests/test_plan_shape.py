@@ -7,6 +7,8 @@ are not pinned.
 
 from __future__ import annotations
 
+import itertools
+
 import pytest
 
 from cdc_2025_spark.plans import plan_string
@@ -235,14 +237,33 @@ def test_resilience_metrics_one_hash_exchange_no_window(spark, sf_dir, cached_fa
     assert "Window" not in p
 
 
-def _sql_execution_ids(spark) -> set[int]:
-    """Ids of the newest SQL executions in the session's status store
-    (kept with the UI off), after the listener bus has drained."""
+def _recent_sql_plans(spark) -> dict[int, str]:
+    """Id -> physical plan of the newest SQL executions in the
+    session's status store (kept with the UI off), after the listener
+    bus has drained."""
     spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
     store = spark._jsparkSession.sharedState().statusStore()
     n = store.executionsCount()
     recent = store.executionsList(max(n - 50, 0), 50)
-    return {recent.apply(i).executionId() for i in range(recent.size())}
+    return {
+        e.executionId(): e.physicalPlanDescription()
+        for e in (recent.apply(i) for i in range(recent.size()))
+    }
+
+
+def _jobs_run_by(spark, action) -> int:
+    """Spark jobs ``action()`` starts, read from the status store's
+    ``jobsList`` (newest first; kept with the UI off)."""
+    sc = spark.sparkContext._jsc.sc()
+
+    def newest_ids():
+        sc.listenerBus().waitUntilEmpty()
+        jobs = sc.statusStore().jobsList(None)
+        return (jobs.apply(i).jobId() for i in range(jobs.size()))
+
+    before = next(newest_ids(), -1)
+    action()
+    return sum(1 for _ in itertools.takewhile(lambda j: j > before, newest_ids()))
 
 
 def test_report_page_is_one_sql_execution(spark, cached_fact):
@@ -251,11 +272,55 @@ def test_report_page_is_one_sql_execution(spark, cached_fact):
     from cdc_2025_spark.reference.resilience import resilience_metrics
     from cdc_2025_spark.report import resilience_report_html
 
-    before = max(_sql_execution_ids(spark), default=-1)
+    before = max(_recent_sql_plans(spark), default=-1)
     page = resilience_report_html(resilience_metrics(cached_fact), k=3)
-    new = {i for i in _sql_execution_ids(spark) if i > before}
+    new = {i for i in _recent_sql_plans(spark) if i > before}
     assert len(new) == 1, sorted(new)
     assert page.count("<table>") == 3
+
+
+def test_versioned_commit_adds_no_job_over_a_plain_write(spark, tmp_path):
+    """A versioned commit evaluates its frame once, in the write: its
+    row count and stats come from the footers, so it starts no more
+    jobs than a plain parquet write of the same frame."""
+    from pyspark.sql import functions as F
+
+    from cdc_2025_spark.versioned import write_versioned
+
+    df = (
+        spark.range(3000)
+        .selectExpr("id % 41 AS k", "id AS v")
+        .groupBy("k")
+        .agg(F.sum("v").alias("s"))
+    )
+    plain = _jobs_run_by(spark, lambda: df.write.parquet(str(tmp_path / "plain")))
+    t = str(tmp_path / "tbl")
+    assert _jobs_run_by(spark, lambda: write_versioned(df, t)) <= plain
+    assert (
+        _jobs_run_by(spark, lambda: write_versioned(df, t, mode="overwrite"))
+        <= plain
+    )
+
+
+def test_pivot_wide_one_hash_exchange_unsorted_year_probe(spark):
+    """The pivot export is one aggregate on Industry (one hash
+    Exchange, no PivotFirst), and its years probe runs unsorted: the
+    ~12 years are ordered on the driver."""
+    from cdc_2025_spark.reference import pivot_wide
+
+    fact = spark.createDataFrame(
+        [(f"ind{g}", y, float(g - y % 3)) for g in range(5) for y in (2019, 2020)]
+        + [("ind0", 2019, 1.0), ("ind1", None, 2.0)],
+        "Industry string, Year int, Real_Value double",
+    )
+    before = max(_recent_sql_plans(spark), default=-1)
+    wide = pivot_wide(fact)
+    probes = [p for i, p in _recent_sql_plans(spark).items() if i > before]
+    assert len(probes) == 1
+    assert "Sort" not in probes[0], probes[0]
+    p = plan_string(wide, mode="simple")
+    assert p.count("Exchange hashpartitioning") == 1, p
+    assert "pivotfirst" not in p.lower()
 
 
 def test_corpus_prep_broadcasts_eval_no_cartesian(spark, sf_dir):

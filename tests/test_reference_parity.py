@@ -13,7 +13,6 @@ from __future__ import annotations
 
 import csv
 import math
-import os
 
 import numpy as np
 import pytest
@@ -31,15 +30,12 @@ from cdc_2025_spark.reference import (
 )
 from cdc_2025_spark.schemas import CLEAN_VA_PRICE
 
-from tests.conftest import REFERENCE_DATA
-
-FACT_CSV = os.path.join(REFERENCE_DATA, "clean_va_price.csv")
-METRICS_CSV = os.path.join(REFERENCE_DATA, "resilience_metrics.csv")
+from tests.conftest import reference_csv
 
 
 def load_golden_metrics() -> dict[str, tuple[float | None, float | None]]:
     out = {}
-    with open(METRICS_CSV, newline="") as f:
+    with open(reference_csv("resilience_metrics.csv"), newline="") as f:
         for row in csv.DictReader(f):
             dd = float(row["Drawdown_2020"]) if row["Drawdown_2020"] else None
             rec = float(row["Recovered_Years"]) if row["Recovered_Years"] else None
@@ -62,7 +58,7 @@ def reference_algorithm_metrics() -> dict[str, tuple[float | None, float | None]
     """
     import pandas as pd  # noqa: PLC0415
 
-    df = pd.read_csv(FACT_CSV)
+    df = pd.read_csv(reference_csv("clean_va_price.csv"))
     out: dict[str, tuple[float | None, float | None]] = {}
     for industry, g in df.groupby("Industry"):
         g = g.sort_values("Year")
@@ -88,7 +84,9 @@ def reference_algorithm_metrics() -> dict[str, tuple[float | None, float | None]
 
 @pytest.fixture(scope="module")
 def fact(spark):
-    df = read_csv(spark, FACT_CSV, schema=CLEAN_VA_PRICE)
+    df = read_csv(
+        spark, reference_csv("clean_va_price.csv"), schema=CLEAN_VA_PRICE
+    )
     return with_row_order(df).cache()
 
 
@@ -227,7 +225,7 @@ def test_clean_merge_roundtrip(spark, fact):
     """
     import pandas as pd  # noqa: PLC0415
 
-    pdf = pd.read_csv(FACT_CSV)
+    pdf = pd.read_csv(reference_csv("clean_va_price.csv"))
     nom_rows, price_rows = [], []
     for (ind, yr), g in pdf.groupby(["Industry", "Year"], sort=False):
         k = len(g)
@@ -277,6 +275,66 @@ def test_pivot_wide_mean_collapse(fact):
     got = row["2012"]
     want = 110992 * 100.0 / 108.853
     assert math.isclose(got, want, rel_tol=1e-9)
+
+
+def _pivot_model(fact, values: str = "Real_Value"):
+    """The Spark ``pivot`` form pivot_wide replaced, kept as its model:
+    years sorted by Spark, then ``pivot(...).agg(avg)``."""
+    years = [
+        r[0] for r in fact.select("Year").distinct().orderBy("Year").collect()
+    ]
+    return (
+        fact.groupBy("Industry")
+        .pivot("Year", years)
+        .agg(F.avg(values))
+        .orderBy("Industry")
+    )
+
+
+def _cells(df) -> list[tuple]:
+    """Collected rows with NaN made comparable (NaN != NaN in Python)
+    and kept distinct from NULL."""
+    return [
+        tuple(
+            "NaN" if isinstance(v, float) and math.isnan(v) else v for v in row
+        )
+        for row in df.collect()
+    ]
+
+
+def test_pivot_wide_matches_spark_pivot(spark):
+    """pivot_wide (one conditional aggregate, years sorted on the
+    driver) returns what Spark's own pivot returns: same rows, column
+    names and order, and dtypes. The hand-made fact has a 2x2
+    duplicate-key fan-out (4 rows for one key), NULL and NaN values, a
+    NULL Year, a year one industry lacks, zeros, negatives and a NULL
+    industry."""
+    rows = [
+        # 2x2 fan-out: two nominal rows x two price rows
+        ("  Government", 2019, 1.5),
+        ("  Government", 2019, 2.25),
+        ("  Government", 2019, -0.5),
+        ("  Government", 2019, 4.0),
+        ("  Government", 2020, 0.0),
+        ("  Government", 2021, -3.75),
+        ("Farms", 2019, None),
+        ("Farms", 2020, float("nan")),
+        ("Farms", 2020, 8.0),
+        ("Farms", None, 2.5),
+        ("Mining", 2019, 0.0),
+        ("Mining", 2019, -0.0),
+        ("Mining", 2021, -1.0),
+        (None, 2020, 6.5),
+    ]
+    fact = spark.createDataFrame(
+        rows, "Industry string, Year int, Real_Value double"
+    )
+    for df in (fact, fact.filter(F.col("Year").isNotNull()), fact.limit(0)):
+        got, want = pivot_wide(df), _pivot_model(df)
+        assert got.columns == want.columns
+        assert got.dtypes == want.dtypes
+        assert _cells(got) == _cells(want)
+    assert pivot_wide(fact).columns == ["Industry", "null", "2019", "2020", "2021"]
 
 
 def test_shock_simulation(fact):

@@ -7,7 +7,6 @@ replay of the app's own view code on the reference data."""
 from __future__ import annotations
 
 import html
-import os
 import re
 
 import pandas as pd
@@ -24,15 +23,15 @@ from cdc_2025_spark.report import (
 )
 from cdc_2025_spark.schemas import CLEAN_VA_PRICE
 
-from tests.conftest import REFERENCE_DATA
-
-FACT_CSV = os.path.join(REFERENCE_DATA, "clean_va_price.csv")
+from tests.conftest import reference_csv
 
 
 @pytest.fixture(scope="module")
 def metrics(spark):
     fact = with_row_order(
-        read_csv(spark, FACT_CSV, schema=CLEAN_VA_PRICE)
+        read_csv(
+            spark, reference_csv("clean_va_price.csv"), schema=CLEAN_VA_PRICE
+        )
     )
     return resilience_metrics(fact).cache()
 
