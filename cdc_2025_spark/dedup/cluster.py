@@ -21,6 +21,7 @@ join/agg primitives, drop-in replacement if needed.
 
 from __future__ import annotations
 
+import logging
 import math
 
 from pyspark.sql import DataFrame
@@ -28,6 +29,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import ByteType, IntegerType, LongType, ShortType
 
 _INTEGRAL_TYPES = (ByteType, ShortType, IntegerType, LongType)
+_log = logging.getLogger(__name__)
 
 
 # Edge budget for the driver-side fast path: 200k edges = 3.2 MB of
@@ -264,6 +266,7 @@ def connected_components(
         # longer paths), ``label_prop`` on the ORIGINAL set (a forest
         # can have a larger diameter than the graph it spans, which
         # would inflate label propagation's round count).
+        stalled = False
         for _ in range(FOREST_REDUCE_MAX_ROUNDS):
             if n <= FOREST_EDGES_PER_TASK:
                 labels = _sv_labels_single_task(reduced).localCheckpoint()
@@ -281,6 +284,15 @@ def connected_components(
             labels = _sv_labels_single_task(reduced).localCheckpoint()
             reduced.unpersist()
             return labels
+        _log.warning(
+            "connected_components: %d edges left after the spanning-forest "
+            "reduction (%s; one task holds %d); running the distributed "
+            "%s fallback",
+            n,
+            "shrink stalled" if stalled else f"{FOREST_REDUCE_MAX_ROUNDS} rounds",
+            FOREST_EDGES_PER_TASK,
+            fallback,
+        )
         if fallback == "star":
             # star's first step localCheckpoints (eager), so the
             # persisted reduced frame can release right after the call

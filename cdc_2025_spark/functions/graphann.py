@@ -40,10 +40,14 @@ Scale shape — the part that matters at 100 TB:
 
 from __future__ import annotations
 
+import logging
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from cdc_2025_spark.functions.embeddings import cosine, make_cosine_udf
+
+_log = logging.getLogger(__name__)
 
 
 def knn_graph_from_candidates(
@@ -276,6 +280,14 @@ def knn_graph_blocked(
             train = emb.filter(
                 F.pmod(F.xxhash64(F.col(id_col)), F.lit(1000))
                 < F.lit(int(train_fraction * 1000))
+            )
+        else:
+            _log.warning(
+                "knn_graph_blocked: a train_fraction=%g sample of %d vectors "
+                "undershoots 10x the %d cells; training on the full corpus",
+                train_fraction,
+                n,
+                n_cells,
             )
     cents = lloyd_kmeans(
         train,

@@ -5,6 +5,8 @@ semantics pinned on literal frames (SURVEY.md §5.3).
 
 from __future__ import annotations
 
+import logging
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -1322,7 +1324,7 @@ def test_shared_caches_remark_persist_after_external_clearcache(
     assert b.storageLevel.useMemory and d.storageLevel.useMemory
 
 
-def test_cc_filtering_reduction_matches_driver_union_find(spark):
+def test_cc_filtering_reduction_matches_driver_union_find(spark, caplog):
     """Round-10: over-budget integral graphs take the FILTERING path
     (partition-local star forests -> single-task vectorized SV
     labels). Pin exact equality with the driver union-find on a
@@ -1354,6 +1356,7 @@ def test_cc_filtering_reduction_matches_driver_union_find(spark):
     assert (9999, 9999) in expect
 
     # (a) single-task finish: budget below edge count, edges fit a task
+    caplog.set_level(logging.WARNING, cl.__name__)
     got = {
         (r["id"], r["comp"])
         for r in cl.connected_components(
@@ -1361,6 +1364,7 @@ def test_cc_filtering_reduction_matches_driver_union_find(spark):
         ).collect()
     }
     assert got == expect
+    assert not caplog.records
 
     # (b) forced multi-round reduction: shrink task capacity so the
     # first passes cannot finish single-task
@@ -1383,6 +1387,11 @@ def test_cc_filtering_reduction_matches_driver_union_find(spark):
         assert got == expect - {(9999, 9999)}
     finally:
         cl.FOREST_EDGES_PER_TASK = orig
+    # the degraded path says so through the module logger
+    [rec] = caplog.records
+    assert rec.levelno == logging.WARNING
+    assert "edges left" in rec.getMessage() and "star fallback" in rec.getMessage()
+    caplog.clear()
 
     # (c) label_prop fallback with reduction stalled: falls back to
     # the ORIGINAL edge set (diameter posture) — same labels. Uses a
@@ -1407,6 +1416,8 @@ def test_cc_filtering_reduction_matches_driver_union_find(spark):
         assert got == expect_shallow
     finally:
         cl.FOREST_EDGES_PER_TASK = orig
+    [rec] = caplog.records
+    assert "label_prop fallback" in rec.getMessage()
 
 
 def test_spanning_forest_reduce_preserves_components(spark):

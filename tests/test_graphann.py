@@ -5,6 +5,7 @@ LSH-built graph, and determinism."""
 
 from __future__ import annotations
 
+import logging
 import math
 
 import pytest
@@ -322,7 +323,7 @@ def test_registered_config_recall_and_hop_batch_monotone(spark, sf_dir):
     assert sum(recalls) / len(recalls) >= 0.9, recalls
 
 
-def test_train_fraction_validation_and_fallback(spark, corpus):
+def test_train_fraction_validation_and_fallback(spark, corpus, caplog):
     """train_fraction outside (0, 1] raises; a fraction whose sample
     would undershoot 10x the cell count falls back to full-corpus
     training (same graph as the default)."""
@@ -342,10 +343,15 @@ def test_train_fraction_validation_and_fallback(spark, corpus):
             corpus, k=4, cell_target=64
         ).collect()
     )
-    fb = sorted(
-        (r["src"], r["dst"])
-        for r in knn_graph_blocked(
-            corpus, k=4, cell_target=64, train_fraction=0.05
-        ).collect()
-    )
+    with caplog.at_level(logging.WARNING, "cdc_2025_spark.functions.graphann"):
+        fb = sorted(
+            (r["src"], r["dst"])
+            for r in knn_graph_blocked(
+                corpus, k=4, cell_target=64, train_fraction=0.05
+            ).collect()
+        )
     assert base == fb
+    # the fallback is loud
+    [rec] = caplog.records
+    assert rec.levelno == logging.WARNING
+    assert "full corpus" in rec.getMessage()

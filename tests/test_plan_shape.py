@@ -10,6 +10,7 @@ from __future__ import annotations
 import itertools
 
 import pytest
+from pyspark.sql import functions as F
 
 from cdc_2025_spark.plans import plan_string
 from cdc_2025_spark.queries import QUERIES
@@ -195,27 +196,33 @@ def test_shuffle_budget(spark, sf_dir, name, max_exchanges):
     assert n <= max_exchanges, f"{name}: {n} exchanges"
 
 
-@pytest.fixture
-def cached_fact(spark):
+def _resilience_fact(spark, shift: int = 0):
+    """A 6-industry, 9-year fact with ``_row_order``; ``shift``
+    changes every value."""
     from cdc_2025_spark.io import with_row_order
 
     rows = [
-        (f"ind{g}", y, float((7 * g + y) % 11))
+        (f"ind{g}", y, float((7 * g + y + shift) % 11))
         for g in range(6)
         for y in range(2016, 2025)
     ]
-    fact = with_row_order(
+    return with_row_order(
         spark.createDataFrame(rows, "Industry string, Year int, Real_Value double")
-    ).cache()
+    )
+
+
+@pytest.fixture
+def cached_fact(spark):
+    fact = _resilience_fact(spark).cache()
     fact.count()
     yield fact
     fact.unpersist()
 
 
-def test_resilience_metrics_one_hash_exchange_no_window(spark, sf_dir, cached_fact):
-    """Every resilience result is one aggregate on the group key: one
-    hash Exchange and no Window, with or without ``_row_order``, for
-    the base metrics and the shock what-if alike."""
+def test_resilience_metrics_one_hash_exchange_no_window(spark, sf_dir):
+    """On an uncached input every resilience result is one aggregate
+    on the group key: one hash Exchange and no Window, with or without
+    ``_row_order``, for the base metrics and the shock what-if alike."""
     from cdc_2025_spark.io import ROW_ORDER_COL
     from cdc_2025_spark.plans import exchange_count
     from cdc_2025_spark.reference.resilience import (
@@ -223,10 +230,11 @@ def test_resilience_metrics_one_hash_exchange_no_window(spark, sf_dir, cached_fa
         shock_simulation,
     )
 
+    fact = _resilience_fact(spark)
     frames = {
-        "metrics": resilience_metrics(cached_fact),
-        "no_row_order": resilience_metrics(cached_fact.drop(ROW_ORDER_COL)),
-        "shock": shock_simulation(cached_fact, 0.2, 2020),
+        "metrics": resilience_metrics(fact),
+        "no_row_order": resilience_metrics(fact.drop(ROW_ORDER_COL)),
+        "shock": shock_simulation(fact, 0.2, 2020),
     }
     for name, df in frames.items():
         p = plan_string(df, mode="simple")
@@ -235,6 +243,183 @@ def test_resilience_metrics_one_hash_exchange_no_window(spark, sf_dir, cached_fa
         assert "Window" not in p, name
     p = plan_of(spark, sf_dir, "resilience_nation_revenue")
     assert "Window" not in p
+
+
+def _outside_cache(plan: str) -> str:
+    """A simple-mode plan without the subtree under each
+    InMemoryRelation (the cached plan it reads)."""
+    kept, depth = [], None
+    for line in plan.splitlines():
+        indent = len(line) - len(line.lstrip(" :+-"))
+        if depth is not None and indent > depth:
+            continue
+        depth = indent if "InMemoryRelation" in line else None
+        kept.append(line)
+    return "\n".join(kept)
+
+
+def _resilience_results(fact) -> str:
+    """Metrics, a shock what-if and a forecast of ``fact``, as one
+    exact string (NaN, ±inf and -0.0 included)."""
+    from cdc_2025_spark.reference.resilience import (
+        resilience_metrics,
+        shock_simulation,
+        trend_forecast,
+    )
+
+    frames = [
+        resilience_metrics(fact),
+        shock_simulation(fact, 1.5, 2021),
+        trend_forecast(fact, 2027),
+    ]
+    return repr([(df.schema, sorted(map(repr, df.collect()))) for df in frames])
+
+
+def _cache_entries(spark) -> int:
+    return spark._jsparkSession.sharedState().cacheManager().numCachedEntries()
+
+
+def test_resilience_cached_fact_one_job_no_exchange(spark, cached_fact):
+    """On a cached input, once a first call has persisted its
+    per-group artifact, each page, worst-hit and forecast collect is
+    one Spark job, with no Exchange outside the InMemoryRelations its
+    plan reads; with and without ``_row_order``."""
+    from cdc_2025_spark.io import ROW_ORDER_COL
+    from cdc_2025_spark.reference.resilience import (
+        resilience_metrics,
+        shock_simulation,
+        top_k_worst_hit,
+        trend_forecast,
+    )
+    from cdc_2025_spark.report import resilience_report_html
+
+    plain = cached_fact.drop(ROW_ORDER_COL).cache()
+    try:
+        for fact in (cached_fact, plain):
+            frames = {
+                "metrics": resilience_metrics(fact),
+                "shock": shock_simulation(fact, 0.2, 2020),
+                "forecast": trend_forecast(fact, 2027),
+            }
+            requests = {
+                "page": lambda: resilience_report_html(resilience_metrics(fact), k=3),
+                "worst": lambda: top_k_worst_hit(frames["shock"], 3).collect(),
+                "forecast": lambda: frames["forecast"]
+                .filter("Industry = 'ind1'")
+                .collect(),
+            }
+            requests["page"]()
+            for name, action in requests.items():
+                assert _jobs_run_by(spark, action) == 1, name
+            for name, df in frames.items():
+                p = _outside_cache(plan_string(df, mode="simple"))
+                assert "InMemoryRelation" in p, name
+                assert "Exchange" not in p, (name, p)
+    finally:
+        plain.unpersist()
+
+
+def test_resilience_artifact_one_cache_entry_per_input(spark):
+    """Repeated calls on a cached input add one CacheManager entry per
+    (input, group, year, value) triple, whatever their base year,
+    shock or horizon."""
+    from cdc_2025_spark.reference.resilience import (
+        resilience_metrics,
+        shock_simulation,
+        trend_forecast,
+    )
+
+    fact = _resilience_fact(spark, shift=1)
+    fact = fact.withColumn("Nominal", F.col("Real_Value") + 1).cache()
+    before = _cache_entries(spark)
+    try:
+        for _ in range(2):
+            resilience_metrics(fact).collect()
+            resilience_metrics(
+                fact, base_year=2018, shock_year=2021, horizon=1
+            ).collect()
+            shock_simulation(fact, 0.3, 2019).collect()
+            trend_forecast(fact, 2030).collect()
+        assert _cache_entries(spark) == before + 1
+        resilience_metrics(fact, value_col="Nominal").collect()
+        trend_forecast(fact, 2026, value_col="Nominal").collect()
+        assert _cache_entries(spark) == before + 2
+    finally:
+        fact.unpersist()
+
+
+def test_resilience_artifact_follows_the_cache(spark):
+    """The cached shape tracks the input's storage level: after
+    ``unpersist()`` the calls take the uncached shape (one hash
+    Exchange on the input) with the same results, and after
+    ``clearCache()`` and a re-cache the artifact is built again."""
+    from cdc_2025_spark.plans import exchange_count
+    from cdc_2025_spark.reference.resilience import resilience_metrics
+
+    fact = _resilience_fact(spark, shift=2)
+    want = _resilience_results(fact)
+    fact.cache()
+    assert _resilience_results(fact) == want
+    fact.unpersist()
+    assert _resilience_results(fact) == want
+    uncached = resilience_metrics(fact)
+    assert exchange_count(uncached) == 1
+    assert "InMemoryRelation" not in plan_string(uncached, mode="simple")
+
+    spark.catalog.clearCache()  # drops the artifact unpersist left
+    assert _cache_entries(spark) == 0
+    fact.cache()
+    assert _resilience_results(fact) == want
+    assert _cache_entries(spark) == 2  # the input and its artifact
+    fact.unpersist()
+
+
+def test_resilience_artifact_follows_a_rewritten_source(spark, tmp_path):
+    """A fact read from a file, cached, unpersisted, and read and cached
+    again after the file was rewritten has the same plan but new values:
+    the calls then give the new values' results, never those of the
+    artifact built from the first read (it stays cached, unread)."""
+    from pyspark.sql.types import StructType
+
+    from cdc_2025_spark.io import (
+        ROW_ORDER_COL,
+        read_csv,
+        with_row_order,
+        write_single_csv,
+    )
+
+    path = str(tmp_path / "fact.csv")
+    schema = StructType.fromDDL("Industry string, Year int, Real_Value double")
+
+    def read(shift):
+        write_single_csv(_resilience_fact(spark, shift).drop(ROW_ORDER_COL), path)
+        return with_row_order(read_csv(spark, path, schema=schema))
+
+    try:
+        fact = read(5).cache()
+        stale = _resilience_results(fact)  # builds the first artifact
+        fact.unpersist()
+        fact = read(6)
+        want = _resilience_results(fact)
+        assert want != stale
+        assert _resilience_results(fact.cache()) == want
+    finally:
+        spark.catalog.clearCache()
+
+
+def test_resilience_artifact_is_per_input(spark):
+    """A second cached fact with other values never reads the first
+    fact's artifact: each cached fact gives its own uncached results."""
+    first, second = _resilience_fact(spark, shift=3), _resilience_fact(spark, shift=4)
+    want = [_resilience_results(first), _resilience_results(second)]
+    assert want[0] != want[1]
+    first.cache()
+    second.cache()
+    try:
+        assert [_resilience_results(first), _resilience_results(second)] == want
+    finally:
+        first.unpersist()
+        second.unpersist()
 
 
 def _recent_sql_plans(spark) -> dict[int, str]:

@@ -9,7 +9,7 @@ from __future__ import annotations
 import math
 from datetime import datetime, timedelta
 
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
@@ -113,61 +113,10 @@ def _same_metric(got, want) -> bool:
     return abs(got - want) <= 1e-9 * max(1.0, abs(want))
 
 
-@SETTINGS
-@given(
-    rows=st.lists(
-        st.tuples(
-            st.sampled_from(["ind_a", "ind_b", "ind_c"]),
-            st.integers(min_value=2016, max_value=2023),
-            st.one_of(
-                st.sampled_from([0.0, -1.0, 2.0]),
-                st.floats(min_value=-100, max_value=100, allow_nan=False),
-            ),
-        ),
-        min_size=1,
-        max_size=25,
-    ),
-    setting=st.sampled_from(
-        [
-            (2019, 2020, 3),
-            (2019, 2018, 2),  # shock before the base year
-            (2019, 2019, 1),  # shock at the base year
-            (2020, 2017, 2),  # empty recovery range
-            (2018, 2022, 0),
-        ]
-    ),
-    ordered=st.booleans(),
-)
-def test_resilience_metrics_match_sequential_model(spark, rows, setting, ordered):
-    """Drawdown/recovery vs a straight sequential-python model of the
-    reference algorithm (resilience.py:29-66) and vs the grouped-map
-    twin: with ``_row_order``, the first row in file order per
-    (group, year) wins, without it the smallest value; groups missing
-    the base year are absent, a missing shock year gives a NULL
-    drawdown, a zero base gives ±inf / NaN (pandas division); recovery
-    is the first year in the horizon at or above base."""
-    from cdc_2025_spark.io import with_row_order
-    from cdc_2025_spark.reference.resilience import (
-        resilience_metrics,
-        resilience_metrics_grouped_map,
-    )
-
-    base, shock, horizon = setting
-    df = spark.createDataFrame(rows, "Industry string, Year int, Real_Value double")
-    if ordered:
-        df = with_row_order(df)
-    kw = dict(base_year=base, shock_year=shock, horizon=horizon)
-    got = {
-        r["Industry"]: (r["Drawdown_2020"], r["Recovered_Years"])
-        for r in resilience_metrics(df, **kw).collect()
-    }
-    twin = {
-        r["Industry"]: (r["Drawdown_2020"], r["Recovered_Years"])
-        for r in resilience_metrics_grouped_map(df, **kw).collect()
-    }
-
-    # sequential model: first occurrence (or smallest value) per
-    # (group, year)
+def _sequential_metrics(rows, ordered, base, shock, horizon) -> dict:
+    """The reference algorithm (resilience.py:29-66) over (group,
+    year, value) rows in file order: first occurrence (or smallest
+    value) per (group, year)."""
     picked: dict = {}
     for g, y, v in rows:
         if (g, y) not in picked:
@@ -193,12 +142,123 @@ def test_resilience_metrics_match_sequential_model(spark, rows, setting, ordered
                 rec = y - base
                 break
         want[g] = (dd, rec)
-    assert set(got) == set(want) == set(twin)
-    for g, (dd, rec) in want.items():
-        for impl, (gdd, grec) in (("agg", got[g]), ("grouped_map", twin[g])):
-            assert _same_metric(gdd, dd), (impl, g, gdd, dd)
-            assert _same_metric(grec, rec), (impl, g, grec, rec)
-        assert got[g][1] is None or isinstance(got[g][1], int), g
+    return want
+
+
+@SETTINGS
+@given(
+    rows=st.lists(
+        st.tuples(
+            st.sampled_from(["ind_a", "ind_b", "ind_c"]),
+            st.integers(min_value=2016, max_value=2023),
+            st.one_of(
+                st.sampled_from([0.0, -0.0, -1.0, 2.0, math.inf, -math.inf]),
+                st.floats(min_value=-100, max_value=100, allow_nan=False),
+            ),
+        ),
+        min_size=1,
+        max_size=25,
+    ),
+    setting=st.sampled_from(
+        [
+            (2019, 2020, 3),
+            (2019, 2018, 2),  # shock before the base year
+            (2019, 2019, 1),  # shock at the base year
+            (2020, 2017, 2),  # empty recovery range
+            (2018, 2022, 0),
+        ]
+    ),
+    ordered=st.booleans(),
+    shock_pct=st.sampled_from([0.0, 0.15, 1.5, -0.2]),
+)
+# a factor below zero (pct > 1) reverses the order of a year's values,
+# so the shock must scale each one before the least is taken
+@example(
+    rows=[("ind_a", 2019, 1.0), ("ind_a", 2020, 2.0), ("ind_a", 2020, -3.0)],
+    setting=(2019, 2020, 3),
+    ordered=False,
+    shock_pct=1.5,
+)
+def test_resilience_metrics_match_sequential_model(
+    spark, rows, setting, ordered, shock_pct
+):
+    """Drawdown/recovery vs a straight sequential-python model of the
+    reference algorithm (resilience.py:29-66) and vs the grouped-map
+    twin: with ``_row_order``, the first row in file order per
+    (group, year) wins, without it the smallest value; groups missing
+    the base year are absent, a missing shock year gives a NULL
+    drawdown, a zero base gives ±inf / NaN (pandas division); recovery
+    is the first year in the horizon at or above base. The shock
+    what-if equals the model over shocked rows. The rows are spread over
+    the session's partitions (so ``_row_order`` spans them and partial
+    aggregates merge), and metrics and what-if are checked on the input
+    uncached and cached. On a one-partition copy, where sums and ties
+    meet the rows in one order, the uncached and cached results of the
+    metrics, the what-if and the trend forecast agree exactly: NULL,
+    NaN, ±inf and -0.0 included."""
+    from cdc_2025_spark.io import with_row_order
+    from cdc_2025_spark.reference.resilience import (
+        _artifact,
+        resilience_metrics,
+        resilience_metrics_grouped_map,
+        shock_simulation,
+        trend_forecast,
+    )
+
+    base, shock, horizon = setting
+    df = spark.createDataFrame(rows, "Industry string, Year int, Real_Value double")
+    if ordered:
+        df = with_row_order(df)
+    kw = dict(base_year=base, shock_year=shock, horizon=horizon)
+
+    def results(frame) -> dict:
+        frames = {
+            "metrics": resilience_metrics(frame, **kw),
+            "shock": shock_simulation(frame, shock_pct, shock, horizon=horizon),
+            "forecast": trend_forecast(frame, shock + horizon),
+        }
+        out = {}
+        for name, f in frames.items():
+            got = f.collect()
+            out[name] = (repr(f.schema), sorted(repr(tuple(r)) for r in got), got)
+        return out
+
+    def cached_results(frame) -> dict:
+        frame.cache()
+        try:
+            return results(frame)
+        finally:
+            # the artifact outlives its input's unpersist; drop it first
+            _artifact(frame, "Industry", "Year", "Real_Value").unpersist()
+            frame.unpersist()
+
+    one = df.coalesce(1)
+    uncached, cached = results(one), cached_results(one)
+    for name in uncached:
+        assert uncached[name][:2] == cached[name][:2], name
+
+    def by_group(got) -> dict:
+        return {r["Industry"]: (r["Drawdown_2020"], r["Recovered_Years"]) for r in got}
+
+    twin = by_group(resilience_metrics_grouped_map(df, **kw).collect())
+    want = _sequential_metrics(rows, ordered, base, shock, horizon)
+    shocked = [
+        (g, y, v * (1.0 - shock_pct) if y == shock else v) for g, y, v in rows
+    ]
+    want_shock = _sequential_metrics(shocked, ordered, shock - 1, shock, horizon)
+    for shape, res in (("uncached", results(df)), ("cached", cached_results(df))):
+        got = by_group(res["metrics"][2])
+        assert set(got) == set(want) == set(twin), shape
+        for g, (dd, rec) in want.items():
+            for impl, (gdd, grec) in ((shape, got[g]), ("grouped_map", twin[g])):
+                assert _same_metric(gdd, dd), (impl, g, gdd, dd)
+                assert _same_metric(grec, rec), (impl, g, grec, rec)
+            assert got[g][1] is None or isinstance(got[g][1], int), g
+        got = by_group(res["shock"][2])
+        assert set(got) == set(want_shock), shape
+        for g, (dd, rec) in want_shock.items():
+            assert _same_metric(got[g][0], dd), (shape, "shock", g, got[g][0], dd)
+            assert _same_metric(got[g][1], rec), (shape, "shock", g, got[g][1], rec)
 
 
 @SETTINGS

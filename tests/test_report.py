@@ -181,3 +181,31 @@ def test_one_collect_page_matches_on_engine_metrics(spark):
         assert resilience_report_html(metrics, k=k) == _three_query_page(metrics, k)
     metrics.unpersist()
 
+
+def test_top_k_views_break_ties_by_group(spark):
+    """``top_k_worst_hit`` and ``top_k_fastest_recovery`` keep the same
+    rows in the same order at 1 and at 4 partitions: ties at the limit
+    break by the group column, NULL first, as the page's views do."""
+    from cdc_2025_spark.reference.resilience import (
+        top_k_fastest_recovery,
+        top_k_worst_hit,
+    )
+
+    metrics = spark.createDataFrame(
+        EDGE_METRICS,
+        "Industry string, Drawdown_2020 double, Recovered_Years double",
+    )
+    full = {
+        top_k_worst_hit: metrics.orderBy(
+            F.col("Drawdown_2020").asc_nulls_last(), "Industry"
+        ),
+        top_k_fastest_recovery: metrics.na.drop(subset=["Recovered_Years"]).orderBy(
+            "Recovered_Years", "Industry"
+        ),
+    }
+    for view, ordered in full.items():
+        rows = [repr(r) for r in ordered.collect()]
+        for k in (2, 3, 4, 6):
+            for n in (1, 4):
+                got = [repr(r) for r in view(metrics.repartition(n), k).collect()]
+                assert got == rows[:k], (view.__name__, k, n)
