@@ -25,6 +25,7 @@ from __future__ import annotations
 import glob
 import os
 import shutil
+import stat
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
@@ -32,6 +33,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from cdc_2025_spark.schemas import STAR_SCHEMAS, TABLE_NAMES
+from cdc_2025_spark.session import artifact
 
 ROW_ORDER_COL = "_row_order"
 
@@ -186,16 +188,11 @@ def write_single_excel(
         write_xlsx(pdf, path, sheet_name=sheet_name)
 
 
-# DataFrame-handle cache for the star-schema tables, keyed weakly by
-# session. spark.read.parquet is ~100-200 ms per call (file listing +
-# footer schema resolution in the JVM) and the testdata tables are
-# immutable, so re-resolving the same source for every query build is
-# pure driver overhead — the same reason real deployments read from a
-# catalog instead of paths. The cached object is only the UNRESOLVED
-# plan handle; no data is pinned (this is not .cache()/persist).
-from weakref import WeakKeyDictionary as _WeakKeyDictionary  # noqa: E402
+def _table_files(path: str) -> list[str]:
+    if os.path.isdir(path):
+        return sorted(glob.glob(os.path.join(path, "*.parquet")))
+    return [path]
 
-_TABLE_HANDLES = _WeakKeyDictionary()
 
 # Scan-spread support (r15 optimization, guide §2 "make partitioning
 # scale-adaptive"): Spark's vectorized parquet reader cannot split a
@@ -211,33 +208,39 @@ _TABLE_HANDLES = _WeakKeyDictionary()
 # shuffle is ever added: the knob adapts to layout instead of pinning
 # either regime. Deterministic hash partitioning (not round-robin):
 # no sort-before-repartition pass, stable under task retry.
-_ROW_GROUP_CACHE: dict[str, int] = {}
-
-
 def _scan_row_groups(path: str) -> int:
     """Total parquet row groups under ``path`` (file or directory) —
-    the scan's maximum task parallelism. Footer-only reads, memoized
-    per absolute path (testdata is immutable)."""
-    key = os.path.abspath(path)
-    if key in _ROW_GROUP_CACHE:
-        return _ROW_GROUP_CACHE[key]
+    the scan's maximum task parallelism. Footer-only reads."""
     import pyarrow.parquet as pq
 
-    files = (
-        sorted(glob.glob(os.path.join(key, "*.parquet")))
-        if os.path.isdir(key)
-        else [key]
+    return sum(
+        pq.ParquetFile(f).metadata.num_row_groups for f in _table_files(path)
     )
-    n = sum(pq.ParquetFile(f).metadata.num_row_groups for f in files)
-    _ROW_GROUP_CACHE[key] = n
-    return n
+
+
+def _path_stamp(path: str):
+    try:
+        st = os.stat(path)
+    except FileNotFoundError:
+        return None
+    if stat.S_ISDIR(st.st_mode):
+        return tuple(_path_stamp(f) for f in _table_files(path))
+    return st.st_mtime_ns, st.st_size
+
+
+def table_stamp(sf_dir: str, *tables: str) -> tuple:
+    """Each table's ``(mtime_ns, size)`` — a tuple of them, one per
+    part file, for a directory; ``None`` when missing. The key part
+    of a session artifact built from these tables."""
+    return tuple(
+        _path_stamp(os.path.join(sf_dir, f"{name}.parquet")) for name in tables
+    )
 
 
 def read_table(
     spark: SparkSession,
     sf_dir: str,
     name: str,
-    use_cache: bool = True,
     spread_key: str | None = None,
 ) -> DataFrame:
     """Read one star-schema table from a testdata scale-factor dir.
@@ -247,8 +250,10 @@ def read_table(
     long nanoseconds, converted here to a micro-truncated timestamp —
     the same truncation DuckDB applies, so oracle comparisons agree.
 
-    ``use_cache=False`` forces a fresh source resolution (only needed
-    if the files under ``sf_dir`` changed in place).
+    The handle is a session artifact keyed on the table's stamp:
+    ``spark.read.parquet`` costs ~100-200 ms (file listing + footer
+    schema resolution), so builds over unchanged files share one
+    unresolved plan handle. No data is pinned.
 
     ``spread_key``: hash-repartition the scan on this (unique-key)
     column to the session's default parallelism — but only when the
@@ -258,38 +263,30 @@ def read_table(
     """
     if name not in STAR_SCHEMAS:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLE_NAMES}")
-    key = (os.path.abspath(sf_dir), name, spread_key)
-    handles = _TABLE_HANDLES.setdefault(spark, {})
-    if use_cache and key in handles:
-        return handles[key]
-    if not use_cache:
-        # files changed in place: every spread variant of this table
-        # is stale, not just the requested one
-        for stale in [k for k in handles if k[:2] == key[:2]]:
-            del handles[stale]
     path = os.path.join(sf_dir, f"{name}.parquet")
-    if name == "events":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(path)
-        ts_type = dict(df.dtypes).get("ts")
-        if ts_type == "bigint":
-            # integer `div`, not float division: nano longs exceed
-            # double's 53-bit exact range, float rounding would shift
-            # some timestamps by 1us vs DuckDB's truncation
-            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    else:
-        df = spark.read.parquet(path)
-    if spread_key is not None and _scan_row_groups(
-        path
-    ) < spark.sparkContext.defaultParallelism:
-        df = df.repartition(
-            spark.sparkContext.defaultParallelism, spread_key
-        )
-    # always refresh: a use_cache=False caller is telling us the
-    # files changed, so the stale handle must not survive for the
-    # default-path callers either
-    handles[key] = df
-    return df
+
+    def open_table() -> DataFrame:
+        if name == "events":
+            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+            df = spark.read.parquet(path)
+            ts_type = dict(df.dtypes).get("ts")
+            if ts_type == "bigint":
+                # integer `div`, not float division: nano longs exceed
+                # double's 53-bit exact range, float rounding would
+                # shift some timestamps by 1us vs DuckDB's truncation
+                df = df.withColumn(
+                    "ts", F.timestamp_micros(F.expr("ts div 1000"))
+                )
+        else:
+            df = spark.read.parquet(path)
+        parallelism = spark.sparkContext.defaultParallelism
+        if spread_key is not None and _scan_row_groups(path) < parallelism:
+            df = df.repartition(parallelism, spread_key)
+        return df
+
+    key = ("table", os.path.abspath(sf_dir), name, spread_key,
+           table_stamp(sf_dir, name))
+    return artifact(spark, key, open_table)
 
 
 def load_star_schema(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

@@ -12,8 +12,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from cdc_2025_spark.io import read_table
+from cdc_2025_spark.io import read_table, table_stamp
 from cdc_2025_spark.queries.registry import query
+from cdc_2025_spark.session import artifact
 
 
 @query(
@@ -203,18 +204,13 @@ _APRIORI_CTES = f"""
     )
 """
 
-from weakref import WeakKeyDictionary as _WeakKeyDictionary  # noqa: E402
-
-_LEVELS_CACHE: _WeakKeyDictionary = _WeakKeyDictionary()
-
 
 def _frequent_levels(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame]:
-    """(l1, l2, l3, nb) frequent-itemset level frames — cached per
-    (session, corpus) because TWO registered queries (itemsets,
-    association rules) consume the same levels (the _PAIR_CACHE
-    posture from queries/dedup.py).
+    """(l1, l2, l3, nb) frequent-itemset level frames — a session
+    artifact per corpus because TWO registered queries (itemsets,
+    association rules) consume the same levels.
 
     The basket item frame feeds six subtrees of one action and the
     pair-occurrence frame two — both lazily localCheckpoint'd so the
@@ -222,12 +218,15 @@ def _frequent_levels(
     execute once; the level frames themselves (≤ |vocab|^k rows) stay
     plain aggregates over those checkpoints so plan audits can see
     the broadcast-join shape. Blocks release when the frames are
-    GC'd (the cache is weakly keyed on the session)."""
-    per_session = _LEVELS_CACHE.setdefault(spark, {})
-    key = (sf_dir, MINSUP_NUM, MINSUP_DEN)
-    cached = per_session.get(key)
-    if cached is not None:
-        return cached
+    GC'd, with the session."""
+    key = ("frequent_levels", sf_dir, MINSUP_NUM, MINSUP_DEN,
+           table_stamp(sf_dir, "events"))
+    return artifact(spark, key, lambda: _mine_levels(spark, sf_dir))
+
+
+def _mine_levels(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame]:
     ev = read_table(spark, sf_dir, "events")
     items = (
         ev.select(
@@ -294,9 +293,7 @@ def _frequent_levels(
         )
     )
     l3 = freq(c3.groupBy("t1", "t2", "t3").agg(F.count("*").alias("cnt")))
-    out = (l1, l2, l3, nb)
-    per_session[key] = out
-    return out
+    return l1, l2, l3, nb
 
 
 @query(

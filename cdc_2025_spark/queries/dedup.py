@@ -27,8 +27,9 @@ from cdc_2025_spark.dedup import (
     simhash_pairs,
 )
 from cdc_2025_spark.dedup.exact import vocab_key
-from cdc_2025_spark.io import read_table
+from cdc_2025_spark.io import read_table, table_stamp
 from cdc_2025_spark.queries.registry import query
+from cdc_2025_spark.session import artifact
 
 JACCARD_K = 3
 JACCARD_THRESHOLD = 0.35
@@ -45,93 +46,64 @@ JACCARD_MAX_DF = 1000
 # dedup_jaccard_clusters and dedup_incremental_new_docs all consume
 # the SAME (k, threshold, df-cap) pair set, so a pipeline that runs
 # more than one of them should pay for shingling + the inverted-index
-# self-join once. Keyed WEAKLY on the session object (the io.py
-# table-handle pattern): id()-based keys can collide when CPython
-# recycles a stopped context's address, and a strong-ref module dict
-# would pin every session's persisted plan for the process lifetime.
-# persist() is lazy, so a single-query run pays nothing extra.
-from weakref import WeakKeyDictionary as _WeakKeyDictionary  # noqa: E402
-
-_PAIR_CACHE: _WeakKeyDictionary = _WeakKeyDictionary()
-
-
+# self-join once. persist() is lazy, so a single-query run pays
+# nothing extra.
 def _shared_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (sf_dir, JACCARD_K, JACCARD_THRESHOLD, JACCARD_MAX_DF)
-    per_session = _PAIR_CACHE.setdefault(spark, {})
-    cached = per_session.get(key)
-    if cached is not None:
-        # an external catalog.clearCache() (the bench does this
-        # between queries) unpersists the frame AND drops its persist
-        # intent — re-mark it so the next consumer re-materializes
-        # the index once instead of recomputing it per action forever
-        if not cached.storageLevel.useMemory:
-            cached.persist()
-        return cached
-    docs = read_table(spark, sf_dir, "documents")
-    pairs = ngram_jaccard_pairs(
-        docs,
-        k=JACCARD_K,
-        threshold=JACCARD_THRESHOLD,
-        max_doc_freq=JACCARD_MAX_DF,
-    ).persist()
-    per_session[key] = pairs
-    return pairs
+    def build() -> DataFrame:
+        docs = read_table(spark, sf_dir, "documents")
+        return ngram_jaccard_pairs(
+            docs,
+            k=JACCARD_K,
+            threshold=JACCARD_THRESHOLD,
+            max_doc_freq=JACCARD_MAX_DF,
+        ).persist()
 
-
-_MINHASH_CACHE: _WeakKeyDictionary = _WeakKeyDictionary()
+    key = ("jaccard_pairs", sf_dir, JACCARD_K, JACCARD_THRESHOLD,
+           JACCARD_MAX_DF, table_stamp(sf_dir, "documents"))
+    return artifact(spark, key, build)
 
 
 def _shared_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session-shared md5-KM MinHash+LSH pair index over the FULL
-    documents table (id_a, id_b, jaccard) — the _shared_jaccard_pairs
-    posture. Consumers needing pairs over a SUBSET of documents
-    restrict it with semi-joins: every stage of the pipeline is
-    subset-stable (shingle sets and signatures are per-doc functions,
-    banding has no corpus-dependent pruning, and verification is
-    exact per pair), so pairs(S) == pairs(full) ∩ S×S exactly — the
-    full-chain ledger's oracle recomputes over the subset and
-    hash-matches."""
-    key = (sf_dir, JACCARD_K, JACCARD_THRESHOLD, "md5_km")
-    per_session = _MINHASH_CACHE.setdefault(spark, {})
-    cached = per_session.get(key)
-    if cached is not None:
-        if not cached.storageLevel.useMemory:
-            cached.persist()  # see _shared_jaccard_pairs
-        return cached
-    docs = read_table(spark, sf_dir, "documents")
-    pairs = minhash_lsh_pairs(
-        docs, k=JACCARD_K, threshold=JACCARD_THRESHOLD, family="md5_km"
-    ).persist()
-    per_session[key] = pairs
-    return pairs
+    documents table (id_a, id_b, jaccard). Consumers needing pairs
+    over a SUBSET of documents restrict it with semi-joins: every
+    stage of the pipeline is subset-stable (shingle sets and
+    signatures are per-doc functions, banding has no corpus-dependent
+    pruning, and verification is exact per pair), so pairs(S) ==
+    pairs(full) ∩ S×S exactly — the full-chain ledger's oracle
+    recomputes over the subset and hash-matches."""
 
+    def build() -> DataFrame:
+        docs = read_table(spark, sf_dir, "documents")
+        return minhash_lsh_pairs(
+            docs, k=JACCARD_K, threshold=JACCARD_THRESHOLD, family="md5_km"
+        ).persist()
 
-_COMP_CACHE: _WeakKeyDictionary = _WeakKeyDictionary()
+    key = ("minhash_pairs", sf_dir, JACCARD_K, JACCARD_THRESHOLD,
+           table_stamp(sf_dir, "documents"))
+    return artifact(spark, key, build)
 
 
 def _shared_jaccard_components(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """Connected-component labels (id, comp) over the shared exact-
-    Jaccard pair set — cached per (session, corpus) like the pair set
-    itself, because three registered queries (clusters, canonical
-    docs, leakage-free split) consume the SAME labels and label
+    Jaccard pair set — a session artifact like the pair set itself,
+    because three registered queries (clusters, canonical docs,
+    leakage-free split) consume the SAME labels and label
     propagation is the expensive iterative step (measured ~4 s per
-    invocation at sf0.1; the _CENT_CACHE posture from similarity.py)."""
+    invocation at sf0.1)."""
     from cdc_2025_spark.dedup.cluster import connected_components
 
-    key = (sf_dir, JACCARD_K, JACCARD_THRESHOLD, JACCARD_MAX_DF)
-    per_session = _COMP_CACHE.setdefault(spark, {})
-    cached = per_session.get(key)
-    if cached is not None:
-        if not cached.storageLevel.useMemory:
-            cached.persist()  # see _shared_jaccard_pairs
-        return cached
-    cc = connected_components(
-        _shared_jaccard_pairs(spark, sf_dir)
-    ).persist()
-    per_session[key] = cc
-    return cc
+    key = ("jaccard_components", sf_dir, JACCARD_K, JACCARD_THRESHOLD,
+           JACCARD_MAX_DF, table_stamp(sf_dir, "documents"))
+    return artifact(
+        spark,
+        key,
+        lambda: connected_components(
+            _shared_jaccard_pairs(spark, sf_dir)
+        ).persist(),
+    )
 
 
 @query(
@@ -1094,8 +1066,6 @@ SEMDEDUP_CELL_CAP_FACTOR = 4
 # fan-out by WORK, so tiny corpora run one worker and big ones scale
 _SEMDEDUP_PAIRS_PER_TASK = 2_000_000
 
-_SEM_CACHE: _WeakKeyDictionary = _WeakKeyDictionary()
-
 
 def _semdedup_quantizer(
     spark: SparkSession,
@@ -1105,13 +1075,10 @@ def _semdedup_quantizer(
     assign: str,
 ) -> tuple[list[tuple], dict[int, list[tuple]], int]:
     """(top-level centroid rows, sub-centroid rows per oversized
-    cell, cell cap) — cached per (session, sf_dir, k, n_iter,
-    assign), mirroring IVF's _CENTROID_CACHE
-    (queries/similarity.py): the registered query used to re-run
-    five Lloyd iterations on every invocation and was the bench's
-    most expensive entry. Same in-session caveat as there: the key
-    is a path, not a corpus fingerprint — regenerate the parquet in
-    place and you must restart the session.
+    cell, cell cap) — a session artifact per (corpus, k, n_iter,
+    assign), like IVF's centroids (queries/similarity.py): the
+    registered query used to re-run five Lloyd iterations on every
+    invocation and was the bench's most expensive entry.
 
     The guard: cells larger than cap = CAP_FACTOR·ceil(n/k) get
     their own k'-means (k' = ceil(size / ceil(n/k)), one recursion
@@ -1119,17 +1086,27 @@ def _semdedup_quantizer(
     Lloyd runs only when skew exists. One level suffices to break
     the n² term by ~CAP_FACTOR·k; pathological double-skew would
     need a second level and is documented, not chased."""
+    key = ("semdedup_quantizer", sf_dir, k, n_iter, assign,
+           table_stamp(sf_dir, "embeddings"))
+    return artifact(
+        spark,
+        key,
+        lambda: _train_semdedup_quantizer(spark, sf_dir, k, n_iter, assign),
+    )
+
+
+def _train_semdedup_quantizer(
+    spark: SparkSession,
+    sf_dir: str,
+    k: int,
+    n_iter: int,
+    assign: str,
+) -> tuple[list[tuple], dict[int, list[tuple]], int]:
     from cdc_2025_spark.functions.kmeans import (
         assign_cells,
         assign_cells_np,
         lloyd_kmeans,
     )
-
-    key = (sf_dir, k, n_iter, assign)
-    per_session = _SEM_CACHE.setdefault(spark, {})
-    cached = per_session.get(key)
-    if cached is not None:
-        return cached
 
     vec = read_table(spark, sf_dir, "embeddings")
     cents = lloyd_kmeans(
@@ -1173,9 +1150,7 @@ def _semdedup_quantizer(
             assign=assign,
         )
         sub[cell] = [(r["cid"], r["cemb"]) for r in sub_cents.collect()]
-    result = (cent_rows, sub, cap)
-    per_session[key] = result
-    return result
+    return cent_rows, sub, cap
 
 
 def _semdedup_assign(

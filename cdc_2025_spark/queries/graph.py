@@ -8,21 +8,20 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from cdc_2025_spark.io import read_table
+from cdc_2025_spark.io import read_table, table_stamp
 from cdc_2025_spark.queries.registry import query
+from cdc_2025_spark.session import artifact
 
 PR_ITERS = 10
 PR_DAMPING = 0.85
 
-# Session-level memo for the trade-edge frame (the _MEDIA_CACHE /
-# ANN-graph-cache posture): NINE registered graph queries each start
-# from the same lineitem ⋈ orders collapse onto a |nations|^2-row
-# frame — in a served session the collapse runs ONCE and every
-# query reads the checkpointed blocks (deployed-index steady state;
-# the frame is ~600 rows, blocks release with the session).
-from weakref import WeakKeyDictionary as _WeakKeyDictionary  # noqa: E402
-
-_EDGE_CACHE: _WeakKeyDictionary = _WeakKeyDictionary()
+# The trade-edge frame is a session artifact: NINE registered graph
+# queries each start from the same lineitem ⋈ orders collapse onto a
+# |nations|^2-row frame — in a served session the collapse runs ONCE
+# and every query reads the checkpointed blocks (deployed-index
+# steady state; the frame is ~600 rows, blocks release with the
+# session).
+_EDGE_TABLES = ("orders", "lineitem", "customer", "supplier", "nation")
 
 
 def trade_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -30,18 +29,16 @@ def trade_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     unit of weight per lineitem — the demand-flow graph. Dim chains
     (customer, supplier, nation) broadcast into the two fact scans;
     the only big shuffle is lineitem ⋈ orders on the order key.
-    Memoized per (session, sf_dir) behind a lazy localCheckpoint —
+    Built once per (session, corpus) behind a lazy localCheckpoint —
     the corpus collapse executes once per session, not once per
     graph query."""
-    per_session = _EDGE_CACHE.setdefault(spark, {})
-    frame = per_session.get(sf_dir)
-    if frame is not None:
-        return frame
-    frame = _build_trade_edges(spark, sf_dir).localCheckpoint(
-        eager=False
+    return artifact(
+        spark,
+        ("trade_edges", sf_dir, table_stamp(sf_dir, *_EDGE_TABLES)),
+        lambda: _build_trade_edges(spark, sf_dir).localCheckpoint(
+            eager=False
+        ),
     )
-    per_session[sf_dir] = frame
-    return frame
 
 
 def _build_trade_edges(

@@ -63,8 +63,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from cdc_2025_spark.io import read_table
+from cdc_2025_spark.io import read_table, table_stamp
 from cdc_2025_spark.queries.pending_r10 import SCORE_MOD
+from cdc_2025_spark.schemas import TABLE_NAMES
+from cdc_2025_spark.session import artifact
 
 # ---------------------------------------------------------------------------
 # Average precision (tie-group step convention) for the quality score
@@ -2212,33 +2214,27 @@ FROM c
 # Versioned-table semantic diff: the lakehouse layer's driver surface
 # ---------------------------------------------------------------------------
 
-# Session-level memo for scratch versioned tables (the trade_edges /
-# _MEDIA_CACHE posture): repeated driver/bench invocations of the
-# versioned audit queries reuse ONE committed table per (session,
-# sf_dir, kind) instead of accumulating tmpdir copies in /tmp
-# (ADVICE r13); every created dir is also atexit-registered so no
-# copy outlives the process.
-from weakref import WeakKeyDictionary as _WeakKeyDictionary  # noqa: E402
-
-_VERSIONED_TABLE_CACHE: _WeakKeyDictionary = _WeakKeyDictionary()
-
-
 def memo_versioned_table(spark, sf_dir, kind, builder):
     """Return the path of a committed scratch versioned table, built
-    at most once per (session, sf_dir, kind) by ``builder(path)``."""
+    by ``builder(path)`` at most once per session, ``sf_dir`` and
+    ``kind`` while the tables under ``sf_dir`` are unchanged.
+
+    Repeated driver/bench invocations of the versioned audit queries
+    reuse ONE committed table instead of accumulating tmpdir copies
+    in /tmp (ADVICE r13); every created dir is also atexit-registered
+    so no copy outlives the process."""
     import atexit
     import shutil
     import tempfile
 
-    per_session = _VERSIONED_TABLE_CACHE.setdefault(spark, {})
-    key = (sf_dir, kind)
-    path = per_session.get(key)
-    if path is None:
+    def build() -> str:
         path = tempfile.mkdtemp(prefix=f"cdc2025_{kind}_")
         atexit.register(shutil.rmtree, path, ignore_errors=True)
         builder(path)
-        per_session[key] = path
-    return path
+        return path
+
+    key = ("versioned_table", sf_dir, kind, table_stamp(sf_dir, *TABLE_NAMES))
+    return artifact(spark, key, build)
 
 
 def versioned_diff_audit(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -16,8 +16,9 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from cdc_2025_spark.functions.embeddings import cosine
-from cdc_2025_spark.io import read_table
+from cdc_2025_spark.io import read_table, table_stamp
 from cdc_2025_spark.queries.registry import query
+from cdc_2025_spark.session import artifact
 
 N_QUERY_VECS = 5
 TOP_K = 10
@@ -220,15 +221,9 @@ N_PROBE = 6
 KMEANS_ITER = 3
 
 # IVF index state = the k centroid vectors (k*dim doubles — tiny).
-# Built once per (session, corpus) by distributed k-means and cached
+# Built once per (session, corpus) by distributed k-means and kept
 # driver-side, exactly like a real ANN deployment trains its coarse
-# quantizer once and serves many queries against it. Weak session key
-# for the same lifetime reasons as dedup._PAIR_CACHE.
-from weakref import WeakKeyDictionary as _WeakKeyDictionary  # noqa: E402
-
-_CENTROID_CACHE: _WeakKeyDictionary = _WeakKeyDictionary()
-
-
+# quantizer once and serves many queries against it.
 def _ivf_centroids(spark: SparkSession, sf_dir: str) -> list[tuple]:
     """k-means centroids for the IVF coarse quantizer, as collected
     (cid, cemb) rows: deterministic lowest_id init + 3 Lloyd
@@ -241,21 +236,10 @@ def _ivf_centroids(spark: SparkSession, sf_dir: str) -> list[tuple]:
     split true neighbor sets across more cells) and 5 iters
     (0.90/0.90); the embeddings are unit-norm so euclidean Lloyd's ==
     spherical k-means and no metric mismatch exists with the cosine
-    cell assignment below.
-
-    In-session caveat (same as dedup._PAIR_CACHE): the key is
-    (sf_dir, k, iters), not a corpus fingerprint — if the parquet at
-    sf_dir is REGENERATED within one session, stale centroids are
-    served. Bench/driver runs use one corpus per session, and a stale
-    quantizer only degrades recall (never correctness of the exact
-    re-rank within probed cells); restart the session after swapping
-    corpora in place."""
+    cell assignment below."""
     from cdc_2025_spark.functions.kmeans import lloyd_kmeans
 
-    key = (sf_dir, N_CENTROIDS, KMEANS_ITER)
-    per_session = _CENTROID_CACHE.setdefault(spark, {})
-    cached = per_session.get(key)
-    if cached is None:
+    def build() -> list[tuple]:
         emb = read_table(spark, sf_dir, "embeddings")
         # numpy assignment backend: exact agreement with the
         # expression path is pinned (test_kmeans.py), so the cached
@@ -268,9 +252,11 @@ def _ivf_centroids(spark: SparkSession, sf_dir: str) -> list[tuple]:
             init="lowest_id",
             assign="numpy",
         )
-        cached = [(r["cid"], r["cemb"]) for r in cents.collect()]
-        per_session[key] = cached
-    return cached
+        return [(r["cid"], r["cemb"]) for r in cents.collect()]
+
+    key = ("ivf_centroids", sf_dir, N_CENTROIDS, KMEANS_ITER,
+           table_stamp(sf_dir, "embeddings"))
+    return artifact(spark, key, build)
 
 
 @query("sim_ivf_topk")
@@ -928,30 +914,26 @@ PQ_M = 8          # subspaces (64-dim corpus -> 8 dims each)
 PQ_K_SUB = 16     # centroids per subspace codebook
 PQ_SHORTLIST = 50  # ADC shortlist size before exact re-rank
 
-_PQ_CACHE: _WeakKeyDictionary = _WeakKeyDictionary()
-
 
 def _pq_index(spark: SparkSession, sf_dir: str):
-    """(codebooks, encoded-codes DataFrame) cached per (session,
-    corpus) — the deployed-index posture shared with _ivf_centroids
+    """(codebooks, encoded-codes DataFrame), a session artifact per
+    corpus — the deployed-index posture shared with _ivf_centroids
     and the SemDeDup quantizer (train once, serve many). The encoded
     codes are lazily checkpointed so repeat queries scan the M-byte
-    codes, not the float vectors. Same in-session staleness caveat
-    as the other keyed caches."""
+    codes, not the float vectors."""
     from cdc_2025_spark.functions.pq import pq_encode, pq_train
 
-    key = (sf_dir, PQ_M, PQ_K_SUB, KMEANS_ITER)
-    per_session = _PQ_CACHE.setdefault(spark, {})
-    cached = per_session.get(key)
-    if cached is None:
+    def build():
         emb = read_table(spark, sf_dir, "embeddings")
         books = pq_train(
             spark, emb, m=PQ_M, k_sub=PQ_K_SUB, n_iter=KMEANS_ITER
         )  # one grouped Lloyd: a shuffle per iteration, not per book
         codes = pq_encode(emb, books).localCheckpoint(eager=False)
-        cached = (books, codes)
-        per_session[key] = cached
-    return cached
+        return books, codes
+
+    key = ("pq_index", sf_dir, PQ_M, PQ_K_SUB, KMEANS_ITER,
+           table_stamp(sf_dir, "embeddings"))
+    return artifact(spark, key, build)
 
 
 @query("sim_pq_topk")
@@ -1101,7 +1083,6 @@ def sim_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 CORESET_K = 16
-_KC_CACHE: _WeakKeyDictionary = _WeakKeyDictionary()
 
 
 @query("sample_kcenter_coreset")
@@ -1128,18 +1109,15 @@ def sample_kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
     (measures only against the newest center), so total cost is
     k scans — the same iterative-training posture as Lloyd's. The
     selection is deterministic, so like the other trained artifacts
-    it caches per (session, corpus, k): a repeated invocation (a
-    served query, the bench's best-of-2) returns the identical list
-    without re-running the k rounds."""
+    it is a session artifact per (corpus, k): a repeated invocation
+    (a served query, the bench's best-of-2) returns the identical
+    list without re-running the k rounds."""
     from cdc_2025_spark.functions.coreset import kcenter_greedy
 
     emb = read_table(spark, sf_dir, "embeddings")
-    per_session = _KC_CACHE.setdefault(spark, {})
-    kc_key = (sf_dir, CORESET_K)
-    picked = per_session.get(kc_key)
-    if picked is None:
-        picked = kcenter_greedy(emb, CORESET_K)
-        per_session[kc_key] = picked
+    key = ("kcenter_coreset", sf_dir, CORESET_K,
+           table_stamp(sf_dir, "embeddings"))
+    picked = artifact(spark, key, lambda: kcenter_greedy(emb, CORESET_K))
     return spark.createDataFrame(
         [
             (vid, i + 1, round(d, 4))
@@ -1226,24 +1204,18 @@ def sim_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 PCA_COMPONENTS = 4
 
-_PCA_CACHE: _WeakKeyDictionary = _WeakKeyDictionary()
-
 
 def _pca_model(spark: SparkSession, sf_dir: str):
-    """Fitted (mean, components, eigvals, n) per (session, corpus) —
-    the quantizer-cache posture (_CENTROID_CACHE / _PQ_CACHE, same
-    in-session staleness caveat): the fit is one sufficient-stats
-    pass; repeated invocations reuse the d²-sized model."""
+    """Fitted (mean, components, eigvals, n), a session artifact per
+    corpus like the IVF/PQ quantizers: the fit is one
+    sufficient-stats pass; repeated invocations reuse the d²-sized
+    model."""
     from cdc_2025_spark.functions.pca import pca_fit
 
-    key = (sf_dir, PCA_COMPONENTS)
-    per_session = _PCA_CACHE.setdefault(spark, {})
-    cached = per_session.get(key)
-    if cached is None:
-        emb = read_table(spark, sf_dir, "embeddings")
-        cached = pca_fit(emb, PCA_COMPONENTS)
-        per_session[key] = cached
-    return cached
+    emb = read_table(spark, sf_dir, "embeddings")
+    key = ("pca_model", sf_dir, PCA_COMPONENTS,
+           table_stamp(sf_dir, "embeddings"))
+    return artifact(spark, key, lambda: pca_fit(emb, PCA_COMPONENTS))
 
 
 @query("embed_pca_project")

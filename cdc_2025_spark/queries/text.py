@@ -20,8 +20,9 @@ from cdc_2025_spark.functions.text import (
     rolling_fingerprint,
     token_count,
 )
-from cdc_2025_spark.io import read_table
+from cdc_2025_spark.io import read_table, table_stamp
 from cdc_2025_spark.queries.registry import query
+from cdc_2025_spark.session import artifact
 
 
 def _r4(c):
@@ -1540,25 +1541,16 @@ def text_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 BPE_N_MERGES = 20
 
-from weakref import WeakKeyDictionary as _WeakKeyDictionary  # noqa: E402
-
-_BPE_CACHE: _WeakKeyDictionary = _WeakKeyDictionary()
-_QC_CACHE: _WeakKeyDictionary = _WeakKeyDictionary()
-
 
 def _bpe_merges(spark: SparkSession, sf_dir: str):
-    """Learned merge list per (session, corpus) — the quantizer-cache
-    posture (IVF/PQ/PCA; same in-session staleness caveat): both BPE
-    queries share one training run."""
+    """Learned merge list, a session artifact per corpus like the
+    IVF/PQ/PCA quantizers: both BPE queries share one training run."""
     from cdc_2025_spark.functions.bpe import bpe_train
 
-    key = (sf_dir, BPE_N_MERGES)
-    per_session = _BPE_CACHE.setdefault(spark, {})
-    cached = per_session.get(key)
-    if cached is None:
-        cached = bpe_train(read_table(spark, sf_dir, "documents"), BPE_N_MERGES)
-        per_session[key] = cached
-    return cached
+    docs = read_table(spark, sf_dir, "documents")
+    key = ("bpe_merges", sf_dir, BPE_N_MERGES,
+           table_stamp(sf_dir, "documents"))
+    return artifact(spark, key, lambda: bpe_train(docs, BPE_N_MERGES))
 
 
 @query("text_bpe_vocab_merges")
@@ -1650,24 +1642,23 @@ def text_quality_classifier_scores(
             F.lit(0),  # NULL text -> negative class, not NULL label
         ).alias("y"),
     )
-    # trained weights cached per (session, corpus, hyperparams) — the
-    # SemDeDup-quantizer posture for iterative trainers: IRLS is
+    # trained weights are a session artifact per (corpus,
+    # hyperparams), like the SemDeDup quantizer: IRLS is
     # deterministic, so repeated invocations (a served scoring query)
     # must not pay 5 Newton actions again for identical weights
-    per_session = _QC_CACHE.setdefault(spark, {})
-    qc_key = (sf_dir, QC_BUCKETS, QC_ITERS, QC_LAMBDA, QC_MARKER)
-    cached = per_session.get(qc_key)
-    if cached is None:
-        w, b, _losses = logreg_train_irls(
+    key = ("quality_classifier", sf_dir, QC_BUCKETS, QC_ITERS, QC_LAMBDA,
+           QC_MARKER, table_stamp(sf_dir, "documents"))
+    w, b = artifact(
+        spark,
+        key,
+        lambda: logreg_train_irls(
             feat,
             labels,
             QC_BUCKETS,
             n_iter=QC_ITERS,
             lam_per_row=QC_LAMBDA,
-        )
-        per_session[qc_key] = (w, b)
-    else:
-        w, b = cached
+        )[:2],
+    )
     return (
         logreg_score(feat, w, b)
         .join(labels, "id")

@@ -10,8 +10,11 @@ specific, so the same factory works under YARN/K8s with a different
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
+from weakref import WeakKeyDictionary
 
-from pyspark.sql import SparkSession
+from pyspark import StorageLevel
+from pyspark.sql import DataFrame, SparkSession
 
 
 def get_spark(
@@ -30,11 +33,12 @@ def get_spark(
       wrong.
     - Arrow enabled for the pandas-UDF operators (similarity search,
       multimodal decode) — vectorized JVM<->Python transfer.
-    - Shuffle partitions default small locally (overridable); on a real
+    - ``local[N]`` and the shuffle partitions default to the cores this
+      process may run on (``SPARK_GRAFT_CPUS`` overrides); on a real
       cluster AQE coalesces from a high initial number, so the static
       value matters little.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0)))
     if master is None:
         master = f"local[{cpus}]"
     if shuffle_partitions is None:
@@ -86,3 +90,39 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+# per-session artifact dicts: key -> (value, storage level to restore)
+_ARTIFACTS: WeakKeyDictionary = WeakKeyDictionary()
+
+
+def artifact(spark: SparkSession, key: tuple, build: Callable):
+    """The session's artifact under ``key``: ``build()`` on the first
+    request, the same object on every later one.
+
+    ``key[0]`` names the artifact; the rest covers everything the
+    build depends on — its parameters and ``io.table_stamp`` of every
+    table it reads, so a table rewritten in place is a new key and a
+    rebuild, never a stale hit. The dict is keyed weakly on the
+    session: artifacts live as long as it does (an ``id()`` key could
+    collide with a recycled address, a strong one would pin every
+    session's persisted plans for the process lifetime).
+
+    ``catalog.clearCache()`` drops persist intent along with the
+    blocks, so a DataFrame that ``build()`` persisted is persisted
+    again, at its recorded level, on a hit that finds it at NONE.
+    ``localCheckpoint`` blocks are RDD blocks and outlive
+    ``clearCache()``; checkpointed frames and driver-side values are
+    returned as they are, with no JVM call on a hit.
+    """
+    per_session = _ARTIFACTS.setdefault(spark, {})
+    if key not in per_session:
+        value = build()
+        level = StorageLevel.NONE
+        if isinstance(value, DataFrame) and value.is_cached:
+            level = value.storageLevel
+        per_session[key] = value, level
+    value, level = per_session[key]
+    if level != StorageLevel.NONE and value.storageLevel == StorageLevel.NONE:
+        value.persist(level)
+    return value

@@ -106,8 +106,8 @@ def test_unbucketed_join_shuffles_as_baseline(spark, bucketed_tables):
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        orders = read_table(spark, SF, "orders", use_cache=False)
-        customer = read_table(spark, SF, "customer", use_cache=False)
+        orders = read_table(spark, SF, "orders")
+        customer = read_table(spark, SF, "customer")
         j = orders.join(
             customer, orders.o_custkey == customer.c_custkey
         )

@@ -1237,11 +1237,7 @@ def test_leakage_free_split_keeps_neardup_pairs_together(spark):
 
     from unittest import mock
 
-    from cdc_2025_spark.queries.dedup import (
-        _COMP_CACHE,
-        _PAIR_CACHE,
-        sample_leakage_free_split,
-    )
+    from cdc_2025_spark.queries.dedup import sample_leakage_free_split
 
     def doc_bucket(i: int) -> int:
         return int(hashlib.md5(str(i).encode()).hexdigest()[:8], 16) % 10
@@ -1258,19 +1254,17 @@ def test_leakage_free_split_keeps_neardup_pairs_together(spark):
         ],
         "doc_id long, text string",
     )
-    _PAIR_CACHE.pop(spark, None)  # fixture corpus, not the sf tables
-    _COMP_CACHE.pop(spark, None)
-    try:
-        with mock.patch(
-            "cdc_2025_spark.queries.dedup.read_table", return_value=docs
-        ):
-            out = {
-                r["doc_id"]: r
-                for r in sample_leakage_free_split(spark, "fixture").collect()
-            }
-    finally:
-        _PAIR_CACHE.pop(spark, None)
-        _COMP_CACHE.pop(spark, None)
+    # a corpus name of its own: the session's pair and component
+    # artifacts are keyed on it, so no other test's corpus is served
+    with mock.patch(
+        "cdc_2025_spark.queries.dedup.read_table", return_value=docs
+    ):
+        out = {
+            r["doc_id"]: r
+            for r in sample_leakage_free_split(
+                spark, "leakage-split-fixture"
+            ).collect()
+        }
     assert doc_bucket(a) < 8 <= doc_bucket(b)  # naive split separates
     assert out[a]["split"] == out[b]["split"]  # cluster split does not
     assert out[a]["comp"] == out[b]["comp"] == min(a, b)

@@ -292,11 +292,7 @@ def test_round8c_operators_empty(spark, empty_docs):
     from unittest import mock
 
     from cdc_2025_spark.dedup import containment_pairs
-    from cdc_2025_spark.queries.dedup import (
-        _COMP_CACHE,
-        _PAIR_CACHE,
-        sample_leakage_free_split,
-    )
+    from cdc_2025_spark.queries.dedup import sample_leakage_free_split
     from cdc_2025_spark.queries.text import (
         text_bm25_search,
         text_quality_yield_curve,
@@ -310,17 +306,16 @@ def test_round8c_operators_empty(spark, empty_docs):
     ):
         assert text_bm25_search(spark, "empty").count() == 0
         assert text_quality_yield_curve(spark, "empty").count() == 0
-    _PAIR_CACHE.pop(spark, None)
-    _COMP_CACHE.pop(spark, None)
-    try:
-        with mock.patch(
-            "cdc_2025_spark.queries.dedup.read_table",
-            return_value=empty_docs,
-        ):
-            assert sample_leakage_free_split(spark, "empty").count() == 0
-    finally:
-        _PAIR_CACHE.pop(spark, None)
-        _COMP_CACHE.pop(spark, None)
+    # a corpus name of its own: the session's pair and component
+    # artifacts are keyed on it, so no other test's corpus is served
+    with mock.patch(
+        "cdc_2025_spark.queries.dedup.read_table",
+        return_value=empty_docs,
+    ):
+        assert (
+            sample_leakage_free_split(spark, "leakage-split-empty").count()
+            == 0
+        )
 
 
 def test_round8_kernels_empty(spark):
