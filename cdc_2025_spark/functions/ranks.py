@@ -29,15 +29,44 @@ Bucket geometry (``edges``):
   search; edge placement may vary run-to-run (sketch merges are
   partition-order-sensitive) but monotonicity makes the answers
   identical either way.
-- ``"auto"`` (default) — the NTILE-style cheap switch: one tiny
-  aggregate collects per-group (min, max, approx-median) of the
-  distinct values; if any group's median sits in the outer 5% of its
-  range (>half the distinct values crammed into <5% of the span —
-  width buckets would overload ~10x+), quantile edges are used,
-  otherwise the width map runs unchanged. TPC-H-like columns take
-  the width path, so registered consumers keep their plans; the
-  switch exists for the zipf-shaped column that would otherwise
-  silently re-grow a single-task window.
+- ``"auto"`` (default) — first the size rule below: a marginal that
+  fits one task is not bucketed at all. A bigger one takes the
+  NTILE-style cheap switch: one tiny aggregate collects per-group
+  (min, max, approx-median) of the distinct values; if any group's
+  median sits in the outer 5% of its range (>half the distinct values
+  crammed into <5% of the span — width buckets would overload
+  ~10x+), quantile edges are used, otherwise the width map runs
+  unchanged. TPC-H-like columns take the width path; the switch
+  exists for the zipf-shaped column that would otherwise silently
+  re-grow a single-task window.
+
+Plan by size. The two-level form only pays when its shuffles run in
+several tasks. Under AQE, a shuffle whose input fits
+``spark.sql.adaptive.coalescePartitions.minPartitionSize`` (under the
+default ``parallelismFirst=true``; ``advisoryPartitionSizeInBytes``
+otherwise) is coalesced into ONE task, so below that size every
+bucket window, offset aggregate and probe stage runs single-task
+anyway: the buckets buy no parallelism and cost ~10 extra stages, a
+probe collect and a ``localCheckpoint``. ``edges="auto"`` therefore
+reads Catalyst's size estimate of the marginal
+(``optimizedPlan().stats().sizeInBytes()``: no job, and a
+``localCheckpoint``-ed input keeps its origin's estimate) and, when it
+is at most that bound, runs each weight's running sum as ONE
+``Window.partitionBy(*group_cols).orderBy(value)`` over the
+distinct-value frame, with no probe. AQE off (or coalescing off)
+never takes that path; neither does an explicit ``edges=``. Bigger
+marginals keep the bucketed plans above unchanged, and so does a
+frame Catalyst cannot size (an RDD-backed ``createDataFrame`` of a
+Python list estimates at ``Long.MaxValue``). Both plans add
+the same weights in the same value order, and the rank weights are
+integer counts, so the answers are identical whichever runs
+(``tests/test_ranks.py``; ``tests/test_rank_paths.py`` per caller).
+
+NULL contract: rows whose value or any group key is NULL are dropped
+before ranking, on every path. A NULL has no place in the value
+order, and left in it lands wherever the bucket map sends it (bucket
+0 under quantile edges, the last bucket under width edges), which
+would make answers depend on geometry.
 
 Shared by the registered Spearman (per-segment ranks), Kruskal-Wallis
 (global ranks), the exact equi-depth histogram, the NTILE distributed
@@ -69,58 +98,87 @@ def _decide_mode(stats) -> str:
     return "width"
 
 
-def _probe_aggs(value_col: str):
-    return [
-        F.min(value_col).cast("double").alias("_mn"),
-        F.max(value_col).cast("double").alias("_mx"),
-        F.percentile_approx(F.col(value_col).cast("double"), 0.5)
-        .alias("_md"),
-    ]
+def _fits_one_task(marg: DataFrame) -> bool:
+    """True when AQE would coalesce a shuffle of ``marg`` into one
+    task: Catalyst's size estimate of the frame (read from the
+    optimized plan, no job) is at most the coalescing bound — the
+    minimum partition size under ``parallelismFirst``, else the
+    advisory size. Always False with AQE or coalescing off."""
+    spark = marg.sparkSession
+    conf = spark._jsparkSession.sessionState().conf()
+    if not (
+        conf.adaptiveExecutionEnabled()
+        and conf.coalesceShufflePartitionsEnabled()
+    ):
+        return False
+    sql_conf = spark._jvm.org.apache.spark.sql.internal.SQLConf
+    bound = conf.getConf(
+        sql_conf.COALESCE_PARTITIONS_MIN_PARTITION_SIZE()
+        if conf.getConf(sql_conf.COALESCE_PARTITIONS_PARALLELISM_FIRST())
+        else sql_conf.ADVISORY_PARTITION_SIZE_IN_BYTES()
+    )
+    size = marg._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    return int(size) <= int(bound)
 
 
 def probe_edges_modes(
     margs: list[tuple[DataFrame, str, tuple[str, ...]]],
-) -> list[tuple[str, list]]:
-    """Resolve edges='auto' for SEVERAL marginals with ONE collect
-    job: the per-marginal probe aggregates are tagged, unioned and
-    submitted together, so a caller invoking the rank kernel more
-    than once (Spearman's two marginals) pays one driver round trip
-    and Spark overlaps the aggregate subtrees inside a single job
-    (guide §1/§2.6) instead of running the probes sequentially.
+) -> list[tuple[str, list | None]]:
+    """Resolve edges='auto' for one or more marginals. A marginal
+    that fits one task (:func:`_fits_one_task`) gets ``("window",
+    None)`` with no job. The rest are probed with ONE collect job:
+    their per-marginal aggregates are tagged, unioned and submitted
+    together, so a caller invoking the rank kernel more than once
+    (Spearman's two marginals) pays one driver round trip and Spark
+    overlaps the aggregate subtrees inside a single job instead of
+    running the probes sequentially.
 
     ``margs``: (marg, value_col, group_cols) per kernel call — all
     entries must share the same group-column list (the fused rows
     carry those columns by name). Returns [(mode, stats_rows), ...]
     aligned with the input; pass each pair to
     ``bucketed_midranks``/``bucketed_cumsums`` via ``probe=``.
-    The min/max literal bounds equal the per-call probe's (union-
-    invariant); the approx-median depends on partition layout, so near
-    the 5% skew edge the width/quantile MODE may differ from a per-call
-    probe — bucket geometry only, never answers (the module contract)."""
+    A probed marginal's stats rows are its per-group (min, max,
+    approx-median); the width path inlines the min/max as literal
+    bounds instead of re-aggregating in-plan. The approx-median
+    depends on partition layout, so near the 5% skew edge the
+    width/quantile mode may differ between runs — bucket geometry
+    only, never answers (the module contract)."""
     if not margs:
         return []
     gc = list(margs[0][2])
-    parts = []
-    for i, (marg, value_col, group_cols) in enumerate(margs):
+    for _, _, group_cols in margs:
         if list(group_cols) != gc:
             raise ValueError(
                 "probe_edges_modes requires identical group_cols; "
                 f"got {gc} vs {list(group_cols)}"
             )
-        sel = [F.lit(i).alias("_probe_tag")] + [
-            F.col(g) for g in gc
-        ] + [F.col(value_col).cast("double").alias("_pv")]
-        parts.append(marg.select(*sel))
+    out = [
+        ("window", None) if _fits_one_task(marg) else None
+        for marg, _, _ in margs
+    ]
+    probed = [i for i, o in enumerate(out) if o is None]
+    if not probed:
+        return out
+    parts = [
+        margs[i][0].select(
+            F.lit(i).alias("_probe_tag"),
+            *gc,
+            F.col(margs[i][1]).cast("double").alias("_pv"),
+        )
+        for i in probed
+    ]
     fused = parts[0]
     for p in parts[1:]:
         fused = fused.unionByName(p)
     stats = fused.groupBy("_probe_tag", *gc).agg(
-        *_probe_aggs("_pv")
+        F.min("_pv").alias("_mn"),
+        F.max("_pv").alias("_mx"),
+        F.percentile_approx("_pv", 0.5).alias("_md"),
     ).collect()
-    out = []
-    for i in range(len(margs)):
+    for i in probed:
         rows = [r for r in stats if r["_probe_tag"] == i]
-        out.append((_decide_mode(rows), rows))
+        out[i] = (_decide_mode(rows), rows)
     return out
 
 
@@ -130,31 +188,19 @@ def _pick_edges_mode(
     group_cols: tuple[str, ...],
     edges: str,
 ):
-    """Resolve edges='auto' to 'width' or 'quantile' via one tiny
-    aggregate over the bounded distinct-value frame (the same
-    build-time-switch pattern the NTILE consumer uses with parquet
-    metadata). Collect size = number of groups (bounded: segments /
-    return flags), never the frame.
-
-    Returns ``(mode, stats_rows)``: the probe already paid for the
-    per-group (min, max), so the width path reuses them as LITERAL
-    bounds instead of re-aggregating in-plan (r15 optimization — one
-    aggregate + one broadcast join removed per kernel call; bucket
-    geometry only GROUPS values, so identical-vs-recomputed bounds
-    cannot change any answer). stats_rows is None when no probe ran
-    (caller pinned the mode explicitly)."""
+    """Resolve ``edges`` for one marginal: an explicit 'width' or
+    'quantile' passes through as ``(edges, None)``; 'auto' is
+    :func:`probe_edges_modes` on this one marginal — ``("window",
+    None)`` when it fits one task, else the probed bucket mode and
+    its per-group stats rows (collect size = number of groups,
+    never the frame)."""
     if edges not in ("auto", "width", "quantile"):
         raise ValueError(
             f"edges must be auto/width/quantile, got {edges!r}"
         )
     if edges != "auto":
         return edges, None
-    gc = list(group_cols)
-    agg_cols = _probe_aggs(value_col)
-    stats = (
-        marg.groupBy(*gc).agg(*agg_cols) if gc else marg.agg(*agg_cols)
-    ).collect()
-    return _decide_mode(stats), stats
+    return probe_edges_modes([(marg, value_col, group_cols)])[0]
 
 
 def _with_bucket(
@@ -226,10 +272,11 @@ def _with_bucket(
         # a bounded map keyed by the group value. (Multi-column
         # groups keep the in-plan join below — no current caller.)
         if not gc:
-            r = stats_rows[0]
+            # an empty frame probes to no row: the bucket expression
+            # is then never evaluated
+            r = stats_rows[0] if stats_rows else {"_mn": None, "_mx": None}
             mn, mx = r["_mn"], r["_mx"]
             if mn is None or mx is None:
-                # empty frame: bucket expression is never evaluated
                 mn = mx = 0.0
             b = _width_bucket(F.lit(float(mn)), F.lit(float(mx)))
             return marg.select(*keep_cols, b.cast("long").alias("_b"))
@@ -305,7 +352,10 @@ def bucketed_cumsums(
     group — the ECDF / rank primitive — computed two-level so no
     window partition exceeds ~|distinct|/n_buckets rows. All weights
     share one bucket structure: the KS two-sample ECDF gets both
-    sides' cumulatives from a single pass.
+    sides' cumulatives from a single pass. Rows with a NULL value or
+    group key are dropped first (the module's NULL contract); a
+    marginal that fits one task runs one plain window instead (the
+    module's size rule), with the same output.
 
     CALLER CONTRACT: only the bucketed distinct-value frame is pinned
     here (marginal-sized); ``marg`` still feeds the auto probe and that
@@ -328,6 +378,10 @@ def bucketed_cumsums(
     cc = [
         c for c in carry_cols if c not in (*gc, value_col, *wc)
     ]
+    ranked = F.col(value_col).isNotNull()
+    for g in gc:
+        ranked = ranked & F.col(g).isNotNull()
+    marg = marg.filter(ranked)
     # ``probe``: a (mode, stats_rows) pair from probe_edges_modes —
     # callers invoking the kernel several times fuse their probe
     # collects into one job and pass the results here (edges must
@@ -339,6 +393,19 @@ def bucketed_cumsums(
     else:
         mode, stats_rows = _pick_edges_mode(
             marg, value_col, group_cols, edges
+        )
+    if mode == "window":
+        w_all = (
+            Window.partitionBy(*gc)
+            .orderBy(value_col)
+            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+        )
+        return marg.select(
+            *gc,
+            value_col,
+            *wc,
+            *cc,
+            *[F.sum(w).over(w_all).alias(f"cum_{w}") for w in wc],
         )
     bucketed = _with_bucket(
         marg, value_col, [*gc, value_col, *wc, *cc], group_cols,

@@ -2399,10 +2399,11 @@ JOIN zero z ON p.n_name = z.n_name
 # Spearman rank correlation with exact tie midranks, per segment
 # ---------------------------------------------------------------------------
 
-# range buckets per marginal for the two-level distributed rank —
-# within-bucket window partitions hold ~|distinct|/SPEARMAN_BUCKETS
-# values; raise with corpus size (a knob, not a correctness input:
-# any bucketing yields the same exact midranks)
+# buckets per marginal for the two-level rank, used only when a
+# marginal is too big for one task (the size rule in
+# functions/ranks.py) — within-bucket window partitions then hold
+# ~|distinct|/SPEARMAN_BUCKETS values; raise with corpus size (a knob,
+# not a correctness input: any bucketing yields the same midranks)
 SPEARMAN_BUCKETS = 1024
 
 
@@ -2417,36 +2418,34 @@ def stats_spearman_price_quantity(
     tie groups are large and the midrank correction is not
     optional), then rho = Pearson corr of the two rank columns.
 
-    BUCKETED-RANK form (the 100 TB path): the corpus collapses in
-    ONE (segment, px, qty) groupBy with map-side partials; exact
-    midranks come from a TWO-LEVEL cumulative count — value-grouped
-    marginals are range-bucketed (fixed-width on the per-segment
-    min/max, SPEARMAN_BUCKETS cells), the within-bucket cumulative
-    runs in a (segment, bucket) window whose partitions hold
-    ~|distinct|/buckets values, and the cross-bucket offset is a
-    window over the bounded bucket-total frame. NO corpus-sized
-    single-partition sort anywhere: a per-row rank window (or a
-    value-grouped window on a nearly-unique column like
-    l_extendedprice) sorts a whole segment inside one task — the
-    2.5x-at-10x ceiling SCALE.md documented. rho is the
+    Ranks come from the shared kernel (functions/ranks.py): the
+    corpus collapses in ONE (segment, px, qty) groupBy with map-side
+    partials, and each marginal's exact midranks are a cumulative
+    count over its distinct values. A marginal that AQE would
+    coalesce into one task (44 KB at sf0.001, 396 KB at sf0.01, by
+    Catalyst's estimate) is ranked in one (segment)-partitioned
+    window with no probe job. A bigger one (~4 MB at sf0.1) takes
+    the TWO-LEVEL form: one probe collect for both marginals picks
+    width or quantile edges, the within-bucket cumulative runs in a
+    (segment, bucket) window over ~|distinct|/SPEARMAN_BUCKETS
+    values, and the cross-bucket offset is a window over the bounded
+    bucket-total frame — no corpus-sized single-partition sort (the
+    2.5x-at-10x ceiling SCALE.md documented). rho is the
     count-weighted Pearson corr over the contingency frame,
     algebraically identical to the per-row corr. Equality against
     the per-row window form is pinned by tests/test_pending_r12.py
-    (``_spearman_exact_window_form`` is the twin kept for that pin).
+    (``_spearman_exact_window_form`` is the twin kept for that pin),
+    and of the two kernel plans by tests/test_rank_paths.py.
 
-    Determinism: bucket assignment only GROUPS values (floor of a
-    monotone map — equal values share a bucket, order is preserved),
-    so ranks are exact rationals from integer cumulative counts
-    regardless of bucket geometry; the final corr is one float
-    aggregate rounded 4dp.
+    Determinism: both plans sum integer counts in value order (bucket
+    assignment only GROUPS values), so ranks are exact rationals
+    whichever runs; the final corr is one float aggregate rounded
+    4dp.
 
     Scale shape: one corpus-wide (segment, px, qty) groupBy shuffle;
-    per-marginal, one distinct-value shuffle + bounded windows; two
+    per marginal, one distinct-value shuffle + bounded windows; two
     distributed joins back onto the contingency frame; output is one
-    row per flag. Skew note: buckets are equal-WIDTH, so a marginal
-    whose distinct values pile into one bucket re-creates a big
-    window partition — acceptable for price-like columns; swap the
-    bucket map for approx-quantile edges if a column needs it."""
+    row per flag."""
     li = read_table(spark, sf_dir, "lineitem").select(
         "l_returnflag",
         F.col("l_extendedprice").alias("px"),
@@ -2461,12 +2460,10 @@ def stats_spearman_price_quantity(
         .localCheckpoint(eager=False)
     )
 
-    # r16: ONE probe job for BOTH marginals. Each bucketed_midranks
-    # call otherwise collects its own edges='auto' probe — two
-    # sequential driver round trips over the same checkpointed cells
-    # frame; probe_edges_modes unions the tagged probe aggregates
-    # into a single collected job (identical min/max literals,
-    # identical mode decision — functions/ranks.py).
+    # both marginals resolve their plan in one call: a marginal that
+    # fits one task needs no probe; the rest share ONE collected
+    # probe job instead of one driver round trip each
+    # (functions/ranks.py probe_edges_modes)
     from cdc_2025_spark.functions.ranks import probe_edges_modes
 
     marg_px = cells.groupBy("l_returnflag", "px").agg(

@@ -1510,8 +1510,9 @@ def eval_spearman_footrule(
         .agg(F.count("*").cast("long").alias("c"))
         .localCheckpoint(eager=False)
     )
-    # r16: one fused probe job for both marginals (the spearman
-    # move — functions/ranks.py probe_edges_modes)
+    # both marginals resolve their plan in one call: no probe for a
+    # marginal that fits one task, one fused probe job for the rest
+    # (functions/ranks.py probe_edges_modes)
     from cdc_2025_spark.functions.ranks import probe_edges_modes
 
     probes = probe_edges_modes([(marg_p, "vp", ()), (marg_s, "vs", ())])

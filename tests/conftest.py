@@ -38,3 +38,14 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture
+def bucketed_ranks(monkeypatch):
+    """Run the rank kernel's two-level bucketed plans at any size.
+    The test tables are below the size bound under which
+    ``functions/ranks.py`` ranks a marginal in one window, so a test
+    that means the bucketed plans asks for them here."""
+    from cdc_2025_spark.functions import ranks
+
+    monkeypatch.setattr(ranks, "_fits_one_task", lambda marg: False)

@@ -900,11 +900,12 @@ def test_chi2_degenerate_single_type_yields_null_v(spark, tmp_path):
     assert orow[cols.index("cramers_v")] is None
 
 
-def test_spearman_grouped_equals_exact_window_form(spark):
-    """The registered value-grouped Spearman (bounded windows over
-    distinct-value frames + weighted corr) must equal the per-row
-    rank-window textbook form — same n, same rho to float noise —
-    at both test scales."""
+def test_spearman_grouped_equals_exact_window_form(spark, bucketed_ranks):
+    """The registered value-grouped Spearman, on its bucketed plan
+    (bounded windows over distinct-value frames + weighted corr),
+    must equal the per-row rank-window textbook form — same n, same
+    rho to float noise — at both test scales. The one-window plan is
+    held to the bucketed one in tests/test_rank_paths.py."""
     for sf_dir in ("/root/testdata/sf0.001", SF_DIR):
         fast = {
             r["l_returnflag"]: r

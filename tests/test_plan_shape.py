@@ -451,6 +451,20 @@ def _jobs_run_by(spark, action) -> int:
     return sum(1 for _ in itertools.takewhile(lambda j: j > before, newest_ids()))
 
 
+def test_spearman_job_counts(spark):
+    """The registered Spearman at sf0.001 ranks each marginal in one
+    window: building it starts only the contingency checkpoint's job
+    (no probe collect), and the collect at most 9 jobs. The bucketed
+    plans took 7 and 14 on 4 cores."""
+    q = QUERIES["stats_spearman_price_quantity"]
+    sf = "/root/testdata/sf0.001"
+    q(spark, sf)  # the session's table handle is built once
+    spark.catalog.clearCache()
+    built = []
+    assert _jobs_run_by(spark, lambda: built.append(q(spark, sf))) <= 1
+    assert _jobs_run_by(spark, built[0].collect) <= 9
+
+
 def test_report_page_is_one_sql_execution(spark, cached_fact):
     """A serving page runs the metrics once: one SQL execution for
     all three views."""
@@ -834,10 +848,13 @@ def test_analyze_reads_only_statted_columns(spark, sf_dir):
     assert "SinglePartition" not in p
 
 
-def test_equidepth_plan_single_scan_distinct_frame(spark, sf_dir):
+def test_equidepth_plan_single_scan_distinct_frame(
+    spark, sf_dir, bucketed_ranks
+):
     """Equi-depth histogram must read the corpus ONCE: the grouped
     count onto the distinct-value frame is lazily localCheckpoint-ed
-    (one materialized collapse; the r12 bucketed-rank shape), so the
+    (one materialized collapse; the r12 bucketed-rank shape, asked
+    for here since the test scale is ranked in one window), so the
     final plan holds ZERO parquet scans — every subtree reads the
     checkpoint's blocks (Scan ExistingRDD) — rank work runs on
     distinct values through bounded windows, and the only joins are
